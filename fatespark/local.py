@@ -174,9 +174,12 @@ class LocalSearchIndex:
                            recursive=True):
             post = os.path.join(index_dir, "postings")
         self._post_ix = _RGIndex(post, "term")
-        self._docs_dir: str | list[str] = (
-            self._paths.get("docs", []) if self._paths is not None
-            else os.path.join(index_dir, "docs"))
+        # the docs file list is resolved once, like the skip indexes above
+        self._docs_files = sorted(
+            f for d in src("docs")
+            for f in glob.glob(os.path.join(d, "**", "*.parquet"),
+                               recursive=True))
+        self._docs_ds = None  # pyarrow dataset, built on first urls_of
 
     # -- stats --------------------------------------------------------------
     def term_stats(self, terms: list[str]) -> dict[str, dict]:
@@ -249,10 +252,7 @@ class LocalSearchIndex:
 
     # -- search -------------------------------------------------------------
     def _blocks(self, terms: list[str]) -> pd.DataFrame:
-        return self._post_ix.read(
-            list(terms),
-            ["bucket", "term", "field", "n", "first_doc", "last_doc",
-             "max_tf", "min_dl", "docs", "tfs", "dls"])
+        return self._post_ix.read(list(terms), _BLOCK_COLS)
 
     def urls_of(self, doc_ids: list[int]) -> dict[int, str]:
         """doc_id -> url from the docs table (pyarrow dataset filter with
@@ -261,12 +261,9 @@ class LocalSearchIndex:
         import pyarrow.compute as pc
         if not doc_ids:
             return {}
-        dirs = (self._docs_dir if isinstance(self._docs_dir, list)
-                else [self._docs_dir])
-        files = sorted(f for d in dirs
-                       for f in glob.glob(os.path.join(d, "**", "*.parquet"),
-                                          recursive=True))
-        t = ds.dataset(files, format="parquet").to_table(
+        if self._docs_ds is None:
+            self._docs_ds = ds.dataset(self._docs_files, format="parquet")
+        t = self._docs_ds.to_table(
             columns=["doc_id", "url"],
             filter=pc.field("doc_id").isin(list(doc_ids)))
         return dict(zip(t["doc_id"].to_pylist(), t["url"].to_pylist()))
@@ -284,10 +281,14 @@ class LocalSearchIndex:
                jm_lambda: float = 0.7,
                delta: float = 1.0) -> pd.DataFrame:
         """Identical semantics and results to ``SearchIndex.search`` (same
-        kernels, same per-bucket scoring, same (score DESC, doc_id ASC)
-        total order); returns a pandas DataFrame (doc_id, score).
+        kernels, same (score DESC, doc_id ASC) total order); returns a
+        pandas DataFrame (doc_id, score[, url]). One pass over all buckets:
+        one stream per (term, field) and one kernel call, whose top-k is
+        the answer — bit-identical to the distributed per-bucket top-k
+        merge, since every doc lives in one bucket and sums its streams
+        with global idf/avgdl in ascending (term, field) order.
         ``exclude`` mirrors the distributed reader: NOT-terms whose docs
-        are dropped before per-bucket top-k selection. ``filter_terms`` /
+        are dropped before top-k selection. ``filter_terms`` /
         ``filter_field`` mirror the index-side metadata filter (IN-list
         restriction before top-k, no score contribution); ``search_after``
         the O(k)-per-page cursor pagination (see SearchIndex.search)."""
@@ -302,7 +303,7 @@ class LocalSearchIndex:
         stats = self.term_stats(qterms)
         present = [t for t in qterms if t in stats]
         if not present or (mode == "AND" and len(present) < len(qterms)):
-            return _empty_result()
+            return _empty_result(with_url)
         xterms = _fold_terms(exclude, self.analyzer) if exclude else []
         xstats = self.term_stats(xterms) if xterms else {}
         xpresent = sorted({t for t in xterms if t in xstats})
@@ -311,7 +312,7 @@ class LocalSearchIndex:
         fstats = self.term_stats(fterms) if fterms else {}
         fpresent = sorted({t for t in fterms if t in fstats})
         if fterms and not fpresent:
-            return _empty_result()
+            return _empty_result(with_url)
         w = list(weights) if weights is not None else [1.0] * self.n_fields
         # boost keys run through the index analyzer, same as query terms
         # (reader parity with SearchIndex.search)
@@ -350,86 +351,75 @@ class LocalSearchIndex:
                     for (t, f) in idfs}
         else:
             sims = None
-        pdf = self._blocks(sorted(set(present + xpresent + fpresent)))
+        streams = _streams(self._blocks(
+            sorted(set(present + xpresent + fpresent))))
+        xset, fset = frozenset(xpresent), frozenset(fpresent)
+        allowed = None
+        if fset:
+            fparts = [self._stream_docs(g) for (t, f), g in streams.items()
+                      if t in fset
+                      and (filter_field is None or f == filter_field)]
+            if not fparts:
+                return _empty_result(with_url)
+            allowed = np.unique(np.concatenate(fparts))
+        drop = self.tombstones
+        xparts = [self._stream_docs(g) for (t, _), g in streams.items()
+                  if t in xset]
+        if xparts:
+            excl = np.unique(np.concatenate(xparts))
+            drop = excl if drop is None else np.union1d(drop, excl)
+        by_tf = {}
+        for tf_key, g in streams.items():
+            if tf_key[0] in xset or tf_key not in idfs:
+                continue
+            tb = _term_blocks_from_pdf(
+                g, idfs[tf_key], self.field_avgdl.get(tf_key[1], self.avgdl),
+                self.codec_name, sim=None if sims is None else sims[tf_key])
+            if drop is not None:
+                tb = tb.without_docs(drop)
+            if allowed is not None:
+                tb = tb.keep_docs(allowed)
+            if tb.total:
+                by_tf[tf_key] = tb
+        keys = sorted(by_tf)
+        terms_here = sorted({t for t, _ in keys})
+        if not keys or (mode == "AND" and len(terms_here) < len(present)):
+            return _empty_result(with_url)
         qmul = float(10 ** quantize) if quantize else None
-        k_local = k + offset
         cursor = (float(search_after[0]), int(search_after[1])) \
             if search_after is not None else None
-        xset = frozenset(xpresent)
-        fset = frozenset(fpresent)
-        parts = []
-        for _, bpdf in pdf.groupby("bucket"):
-            allowed = None
-            if fset:
-                fmask = bpdf["term"].isin(fset)
-                if filter_field is not None:
-                    fmask &= bpdf["field"] == filter_field
-                fparts = [_term_blocks_from_pdf(g, 0.0, self.avgdl,
-                                                self.codec_name)
-                          .decode_all()[0]
-                          for _, g in bpdf[fmask].groupby(["term", "field"])]
-                if not fparts:
-                    continue
-                allowed = np.unique(np.concatenate(fparts))
-            bucket_drop = self.tombstones
-            if xset:
-                xmask = bpdf["term"].isin(xset)
-                xpdf, bpdf = bpdf[xmask], bpdf[~xmask]
-                xparts = [_term_blocks_from_pdf(g, 0.0, self.avgdl,
-                                                self.codec_name)
-                          .decode_all()[0]
-                          for _, g in xpdf.groupby(["term", "field"])]
-                if xparts:
-                    excl = np.unique(np.concatenate(xparts))
-                    bucket_drop = (excl if bucket_drop is None
-                                   else np.union1d(bucket_drop, excl))
-            by_tf = {(t, int(f)): _term_blocks_from_pdf(
-                        g, idfs[(t, int(f))],
-                        self.field_avgdl.get(int(f), self.avgdl),
-                        self.codec_name,
-                        sim=None if sims is None else sims[(t, int(f))])
-                     for (t, f), g in bpdf.groupby(["term", "field"])
-                     if (t, int(f)) in idfs}
-            if bucket_drop is not None:
-                by_tf = {k: tb.without_docs(bucket_drop)
-                         for k, tb in by_tf.items()}
-                by_tf = {k: tb for k, tb in by_tf.items() if tb.total}
-            if allowed is not None:
-                by_tf = {k: tb.keep_docs(allowed)
-                         for k, tb in by_tf.items()}
-                by_tf = {k: tb for k, tb in by_tf.items() if tb.total}
-            terms_here = {t for t, _ in by_tf}
-            if mode == "AND" and len(terms_here) < len(present):
-                continue
-            keys = sorted(by_tf)
-            if mode == "AND":
-                groups = [[by_tf[kk] for kk in keys if kk[0] == t]
-                          for t in sorted(terms_here)]
-                docs, scores = score_and(groups, self.avgdl, k_local, qmul,
-                                         after=cursor)
-            elif use_wand == "maxscore":
-                docs, scores = score_maxscore_or(
-                    [by_tf[kk] for kk in keys], self.avgdl, k_local, qmul,
-                    after=cursor)
-            elif use_wand:
-                docs, scores = score_bmw_or([by_tf[kk] for kk in keys],
-                                            self.avgdl, k_local, qmul,
-                                            after=cursor)
-            else:
-                docs, scores = score_exhaustive_or([by_tf[kk] for kk in keys],
-                                                   self.avgdl, k_local, qmul,
-                                                   after=cursor)
-            parts.append(pd.DataFrame({"doc_id": docs, "score": scores}))
-        if not parts:
-            return _empty_result()
-        allp = pd.concat(parts, ignore_index=True)
-        allp = allp.sort_values(["score", "doc_id"],
-                                ascending=[False, True],
-                                kind="mergesort").head(k_local)
-        out = allp.iloc[offset:].reset_index(drop=True)
+        if mode == "AND":
+            groups = [[by_tf[kk] for kk in keys if kk[0] == t]
+                      for t in terms_here]
+            docs, scores = score_and(groups, self.avgdl, k + offset, qmul,
+                                     after=cursor)
+        else:
+            kernel = (score_maxscore_or if use_wand == "maxscore"
+                      else score_bmw_or if use_wand
+                      else score_exhaustive_or)
+            docs, scores = kernel([by_tf[kk] for kk in keys], self.avgdl,
+                                  k + offset, qmul, after=cursor)
+        out = pd.DataFrame({"doc_id": docs[offset:],
+                            "score": scores[offset:]})
         if with_url:
             u = self.urls_of([int(d) for d in out["doc_id"]])
-            out = out.assign(url=[u.get(int(d)) for d in out["doc_id"]])
+            out = out.assign(url=np.array(
+                [u.get(int(d)) for d in out["doc_id"]], dtype=object))
+        return out
+
+    def _stream_docs(self, g: pd.DataFrame) -> np.ndarray:
+        """Sorted doc ids of one (term, field) stream."""
+        return _term_blocks_from_pdf(g, 0.0, self.avgdl,
+                                     self.codec_name).decode_all()[0]
+
+    def _positions(self, streams: dict) -> dict[int, dict[str, dict]]:
+        """field -> term -> decoded postings with positions: one bulk
+        decode per (field, term) over every bucket's and chunk's blocks."""
+        from .query import _decode_with_positions
+        out: dict[int, dict[str, dict]] = {}
+        for (t, f), g in streams.items():
+            out.setdefault(f, {})[t] = _decode_with_positions(
+                g, self.codec_name)
         return out
 
     def _phrase_variants(self, phrase: str,
@@ -460,7 +450,7 @@ class LocalSearchIndex:
         """(doc_id, field, tf, dl) matches of ANY variant, tf summed — the
         local twin of ``SearchIndex._phrase_matches`` (span constraints
         included: same shared kernel)."""
-        from .query import _decode_with_positions, _variants_match_rows
+        from .query import _variants_match_rows
         if not bool(self.meta.get("store_positions", True)):
             raise ValueError("index built without positions; phrase disabled")
         variants = [v for v in variants if v]
@@ -470,17 +460,17 @@ class LocalSearchIndex:
             return None
         uniq = sorted({t for v in variants for t in v}
                       | set(exclude or []))
-        pdf = self._post_ix.read(uniq, ["bucket", "term", "field", "n",
-                                        "docs", "tfs", "dls", "poss"])
-        frames = []
-        for (_, fid), fpdf in pdf.groupby(["bucket", "field"]):
-            data = {t: _decode_with_positions(g, self.codec_name)
-                    for t, g in fpdf.groupby("term")}
-            m = _variants_match_rows(data, variants, self.tombstones,
-                                     max_end=max_end, exclude=exclude,
-                                     pre=pre, post=post)
-            if m is not None:
-                frames.append(m.assign(field=np.int32(fid)))
+        return self._field_rows(uniq, lambda data: _variants_match_rows(
+            data, variants, self.tombstones, max_end=max_end,
+            exclude=exclude, pre=pre, post=post))
+
+    def _field_rows(self, terms: list[str], match) -> pd.DataFrame | None:
+        """(doc_id, field, tf, dl): ``match`` applied to each field's
+        decoded positions of ``terms``, over all buckets at once."""
+        by_field = self._positions(_streams(
+            self._post_ix.read(terms, _POS_COLS)))
+        frames = [m.assign(field=np.int32(fid)) for fid in sorted(by_field)
+                  if (m := match(by_field[fid])) is not None]
         if not frames:
             return None
         return pd.concat(frames, ignore_index=True)[
@@ -592,7 +582,7 @@ class LocalSearchIndex:
                               mode: str) -> pd.DataFrame | None:
         """Local twin of ``SearchIndex._enclosure_matches`` (same shared
         ``_variants_enclosure_rows`` kernel, identical results)."""
-        from .query import _decode_with_positions, _variants_enclosure_rows
+        from .query import _variants_enclosure_rows
         if not bool(self.meta.get("store_positions", True)):
             raise ValueError("index built without positions; span "
                              "queries disabled")
@@ -605,20 +595,8 @@ class LocalSearchIndex:
         if not keeps or not others:
             return None
         uniq = sorted({t for v in keeps + others for t in v})
-        pdf = self._post_ix.read(uniq, ["bucket", "term", "field", "n",
-                                        "docs", "tfs", "dls", "poss"])
-        frames = []
-        for (_, fid), fpdf in pdf.groupby(["bucket", "field"]):
-            data = {t: _decode_with_positions(g, self.codec_name)
-                    for t, g in fpdf.groupby("term")}
-            m = _variants_enclosure_rows(data, keeps, others,
-                                         self.tombstones, mode)
-            if m is not None:
-                frames.append(m.assign(field=np.int32(fid)))
-        if not frames:
-            return None
-        return pd.concat(frames, ignore_index=True)[
-            ["doc_id", "field", "tf", "dl"]]
+        return self._field_rows(uniq, lambda data: _variants_enclosure_rows(
+            data, keeps, others, self.tombstones, mode))
 
     def search_span_within(self, little, big, k: int = 10,
                            offset: int = 0, quantize: int | None = None,
@@ -651,7 +629,7 @@ class LocalSearchIndex:
         ``SearchIndex.search_near``: same shared window kernel
         (``query._near_match_docs``), same restricted conjunctive BM25
         (``TermBlocks.keep_docs`` + ``score_and``), identical results."""
-        from .query import _decode_with_positions, _near_match_docs
+        from .query import _near_match_docs
         if not bool(self.meta.get("store_positions", True)):
             raise ValueError("index built without positions; proximity "
                              "search disabled")
@@ -664,49 +642,30 @@ class LocalSearchIndex:
         idfs = {(t, f): w[f] * idf_fn(self.n_docs, st["df"])
                 for t in uniq for f, st in stats[t].items()
                 if f < len(w) and w[f] != 0.0}
-        pdf = self._post_ix.read(uniq, ["bucket", "term", "field", "n",
-                                        "first_doc", "last_doc", "max_tf",
-                                        "min_dl", "docs", "tfs", "dls",
-                                        "poss"])
-        qmul = float(10 ** quantize) if quantize else None
-        k_local, sl = k + offset, int(slop)
-        parts = []
-        for _, bpdf in pdf.groupby("bucket"):
-            allowed = []
-            for _fid, fpdf in bpdf.groupby("field"):
-                data = {t: _decode_with_positions(g, self.codec_name)
-                        for t, g in fpdf.groupby("term")}
-                if any(t not in data for t in uniq):
-                    continue
-                m = _near_match_docs(data, uniq, sl, self.tombstones)
+        streams = _streams(self._post_ix.read(uniq, _BLOCK_COLS + ["poss"]))
+        allowed = []
+        for data in self._positions(streams).values():
+            if all(t in data for t in uniq):
+                m = _near_match_docs(data, uniq, int(slop), self.tombstones)
                 if m.size:
                     allowed.append(m)
-            if not allowed:
-                continue
-            keep = np.unique(np.concatenate(allowed))
-            by_tf = {(t, int(f)): _term_blocks_from_pdf(
-                        g, idfs[(t, int(f))],
-                        self.field_avgdl.get(int(f), self.avgdl),
-                        self.codec_name)
-                     for (t, f), g in bpdf.groupby(["term", "field"])
-                     if (t, int(f)) in idfs}
-            by_tf = {kk: tb.keep_docs(keep) for kk, tb in by_tf.items()}
-            by_tf = {kk: tb for kk, tb in by_tf.items() if tb.total}
-            terms_here = {t for t, _ in by_tf}
-            if len(terms_here) < len(uniq):
-                continue
-            keys = sorted(by_tf)
-            groups = [[by_tf[kk] for kk in keys if kk[0] == t]
-                      for t in sorted(terms_here)]
-            docs, scores = score_and(groups, self.avgdl, k_local, qmul)
-            parts.append(pd.DataFrame({"doc_id": docs, "score": scores}))
-        if not parts:
+        if not allowed:
             return _empty_result()
-        allp = pd.concat(parts, ignore_index=True)
-        allp = allp.sort_values(["score", "doc_id"],
-                                ascending=[False, True],
-                                kind="mergesort").head(k_local)
-        return allp.iloc[offset:][["doc_id", "score"]].reset_index(drop=True)
+        keep = np.unique(np.concatenate(allowed))
+        by_tf = {kk: _term_blocks_from_pdf(
+                    g, idfs[kk], self.field_avgdl.get(kk[1], self.avgdl),
+                    self.codec_name).keep_docs(keep)
+                 for kk, g in streams.items() if kk in idfs}
+        keys = sorted(kk for kk, tb in by_tf.items() if tb.total)
+        terms_here = sorted({t for t, _ in keys})
+        if len(terms_here) < len(uniq):
+            return _empty_result()
+        qmul = float(10 ** quantize) if quantize else None
+        docs, scores = score_and(
+            [[by_tf[kk] for kk in keys if kk[0] == t] for t in terms_here],
+            self.avgdl, k + offset, qmul)
+        return pd.DataFrame({"doc_id": docs[offset:],
+                             "score": scores[offset:]})
 
     def _score_phrase_rows(self, m: pd.DataFrame, k: int, offset: int,
                            quantize: int | None = None,
@@ -881,6 +840,21 @@ def _lev_banded(a: str, b: str, d: int) -> int:
     return prev[lb] if prev[lb] <= d else big
 
 
-def _empty_result() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                         "score": pd.array([], dtype="float64")})
+_BLOCK_COLS = ["term", "field", "n", "first_doc", "last_doc", "max_tf",
+               "min_dl", "docs", "tfs", "dls"]
+_POS_COLS = ["term", "field", "n", "docs", "tfs", "dls", "poss"]
+
+
+def _streams(pdf: pd.DataFrame) -> dict[tuple[str, int], pd.DataFrame]:
+    """(term, field) -> that stream's block rows from every bucket and
+    chunk, in ascending (term, field) order. Every doc lives in exactly one
+    bucket and scores use global idf/avgdl, so one stream over all buckets
+    answers exactly what a per-bucket pass would."""
+    return {(t, int(f)): g
+            for (t, f), g in pdf.groupby(["term", "field"], sort=True)}
+
+
+def _empty_result(with_url: bool = False) -> pd.DataFrame:
+    out = pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
+                        "score": pd.array([], dtype="float64")})
+    return out.assign(url=np.array([], dtype=object)) if with_url else out

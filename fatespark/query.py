@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .analysis import ANALYZERS, ascii_fold
-from .codec import decode_positions, get_codec
+from .codec import (_u64_to_i64_ordered, get_codec, segmented_cumsum_u64,
+                    varint_decode_concat)
 from .oracle import idf as idf_fn
 from .wand import (B, K1, TermBlocks, score_and, score_bmw_or,
                    score_dismax, score_exhaustive_or, score_maxscore_or,
@@ -234,8 +235,9 @@ class SearchIndex:
             return by_field.get(field, {}).get("cf", 0)
         return sum(v["cf"] for v in by_field.values())
 
-    def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], RESULT_SCHEMA)
+    def _empty(self, with_url: bool = False) -> DataFrame:
+        return self.spark.createDataFrame(
+            [], RESULT_SCHEMA + (", url string" if with_url else ""))
 
     # -- per-hit enumeration ---------------------------------------------------
     def find_all(self, query: str | list[str]) -> DataFrame:
@@ -525,12 +527,12 @@ class SearchIndex:
         stats = self.term_stats(qterms)
         present = [t for t in qterms if t in stats]
         if not present or (mode == "AND" and len(present) < len(qterms)):
-            return self._empty()
+            return self._empty(with_url)
         mset = set(mterms)
         if mset - set(qterms):
             raise ValueError("must_terms must be among the query terms")
         if mset - set(present):
-            return self._empty()   # a required term matches nothing
+            return self._empty(with_url)   # a required term matches nothing
         xterms = _fold_terms(exclude, self.analyzer) if exclude else []
         xstats = self.term_stats(xterms) if xterms else {}
         xpresent = sorted({t for t in xterms if t in xstats})
@@ -539,7 +541,7 @@ class SearchIndex:
         fstats = self.term_stats(fterms) if fterms else {}
         fpresent = sorted({t for t in fterms if t in fstats})
         if fterms and not fpresent:
-            return self._empty()   # filter matches no dictionary term
+            return self._empty(with_url)   # filter matches no dictionary term
         w = list(weights) if weights is not None else [1.0] * self.n_fields
         # boost keys run through the SAME analyzer as query terms (fold +
         # tokenize + stem): on a stemming index boosts={'running': 2.0}
@@ -557,7 +559,7 @@ class SearchIndex:
             n_re, avg_over, favg_over, df_re = self._rebase_stats(
                 fpresent, filter_field, present)
             if n_re == 0:
-                return self._empty()
+                return self._empty(with_url)
             # streams absent from the subset (df'=0) drop: no allowed doc
             # contains them, so they could never contribute anyway
             idfs = {(t, f): w[f] * idf_fn(n_re, df_re[(t, f)])
@@ -566,9 +568,9 @@ class SearchIndex:
                     if f < len(w) and w[f] != 0.0
                     and df_re.get((t, f), 0) > 0}
             if mode == "AND" and len({t for t, _ in idfs}) < len(qterms):
-                return self._empty()
+                return self._empty(with_url)
             if not idfs:
-                return self._empty()
+                return self._empty(with_url)
         elif similarity == "classic":
             # Lucene ClassicSimilarity: contribution =
             # (weight * idf_c^2 * boost) * sqrt(tf)/sqrt(dl),
@@ -605,7 +607,7 @@ class SearchIndex:
                     for t in bdf for f in stats[t]
                     if f < len(w) and w[f] != 0.0}
             if not idfs:
-                return self._empty()
+                return self._empty(with_url)
         sims = None
         if similarity == "classic":
             sims = {tf_key: ("classic",) for tf_key in idfs}
@@ -624,7 +626,7 @@ class SearchIndex:
                              / max(self.field_sumdl.get(f, 0.0), 1.0))
                     for (t, f) in idfs}
         if msm is not None and len({t for t, _ in idfs}) < msm:
-            return self._empty()   # floor can never be met
+            return self._empty(with_url)   # floor can never be met
         scored = self._score_buckets(present, idfs, k + offset, mode, use_wand,
                                      quantize, exclude_terms=xpresent,
                                      required_terms=fpresent or None,
@@ -2315,32 +2317,35 @@ def _variants_enclosure_rows(data: dict, keeps: list[list[str]],
 
 
 def _decode_with_positions(g: pd.DataFrame, codec: str = "varint") -> dict:
-    """Decode all block rows of one term within a bucket, positions included,
-    into doc-sorted arrays (handles cross-chunk block interleave). Positions
-    are always varint; docs/tfs/dls use the index codec."""
+    """Decode all block rows of one (term, field) stream, positions
+    included, into doc-sorted arrays. The rows may come from several
+    buckets and build chunks, whose doc ranges interleave. Bulk path: one
+    multi-buffer decode per column across every block, positions as one
+    varint stream cut at doc starts. Positions are always varint;
+    docs/tfs/dls use the index codec."""
     c = get_codec(codec)
     ns = g["n"].to_numpy(np.int64)
-    docs = np.concatenate([c.decode_ids(bb, int(n))
-                           for bb, n in zip(g["docs"], ns)])
-    tfs = np.concatenate([c.decode_u32s(bb, int(n))
-                          for bb, n in zip(g["tfs"], ns)])
-    dls = np.concatenate([c.decode_u32s(bb, int(n))
-                          for bb, n in zip(g["dls"], ns)])
-    poss = np.concatenate([
-        decode_positions(bb, c.decode_u32s(tt, int(n)))
-        for bb, tt, n in zip(g["poss"], g["tfs"], ns)]) if len(ns) else \
-        np.zeros(0, dtype=np.int64)
+    total = int(ns.sum())
+    starts = np.zeros(ns.size, dtype=np.int64)
+    np.cumsum(ns[:-1], out=starts[1:])
+    docs = _u64_to_i64_ordered(segmented_cumsum_u64(
+        c.decode_concat(list(g["docs"]), ns, total), starts))
+    tfs = c.decode_concat(list(g["tfs"]), ns, total).astype(np.int64)
+    dls = c.decode_concat(list(g["dls"]), ns, total).astype(np.int64)
+    tok_starts = np.zeros(docs.size + 1, dtype=np.int64)
+    np.cumsum(tfs, out=tok_starts[1:])
+    n_tok = int(tok_starts[-1])
+    poss = segmented_cumsum_u64(
+        varint_decode_concat(list(g["poss"]), n_tok or None),
+        tok_starts[:-1]).astype(np.int64)
     # compare, don't np.diff: int64 differences overflow for xxhash ids
     if docs.size > 1 and np.any(docs[1:] <= docs[:-1]):
         order = np.argsort(docs, kind="mergesort")
-        src_doc = np.repeat(np.arange(docs.size), tfs)
-        rank = np.empty(docs.size, dtype=np.int64)
-        rank[order] = np.arange(docs.size)
-        perm = np.argsort(rank[src_doc], kind="stable")
-        poss = poss[perm]
         docs, tfs, dls = docs[order], tfs[order], dls[order]
-    tok_starts = np.zeros(docs.size + 1, dtype=np.int64)
-    np.cumsum(tfs, out=tok_starts[1:])
+        src = tok_starts[:-1][order]
+        np.cumsum(tfs, out=tok_starts[1:])
+        poss = poss[np.repeat(src - tok_starts[:-1], tfs)
+                    + np.arange(n_tok, dtype=np.int64)]
     return {"docs": docs, "tfs": tfs, "dls": dls, "poss": poss,
             "tok_starts": tok_starts}
 

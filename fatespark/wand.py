@@ -1,7 +1,8 @@
 """Top-k scoring kernels: vectorized exhaustive BM25, galloping AND
 intersection, and document-at-a-time Block-Max WAND (BMW) with lazy block
-decode. All operate on one bucket's decoded (or lazily decodable) posting
-blocks inside the scorer UDF.
+decode. All operate on decoded (or lazily decodable) posting blocks: one
+bucket's inside the distributed scorer UDF, every bucket's at once in the
+local reader (``local.LocalSearchIndex``).
 
 The per-block ``(first_doc, last_doc, max_tf, min_dl)`` metadata written at
 merge time gives the block upper bound ``idf * part(max_tf, min_dl)`` —
@@ -128,7 +129,8 @@ def topk_select(doc_ids: np.ndarray, scores: np.ndarray, k: int,
 
 
 class TermBlocks:
-    """One (term, field)'s posting blocks within a bucket, decoded lazily per
+    """One (term, field)'s posting blocks — within one bucket (distributed
+    scorer) or across all buckets (local reader) — decoded lazily per
     block. ``idf`` is the full scalar multiplier for this stream's
     contributions — field weight × idf(term, field) for weighted multi-field
     scoring; ``avgdl`` is the FIELD's average length (BM25F-style per-field
@@ -188,11 +190,11 @@ class TermBlocks:
         return got
 
     def decode_all(self):
-        """(docs, tfs, dls) for the whole term within the bucket, doc-sorted.
+        """(docs, tfs, dls) for the whole stream, doc-sorted.
         Bulk path: ONE vectorized multi-buffer varint decode across every
         block (per-block python calls dominate for long posting lists).
-        Blocks from different build chunks may interleave doc ranges, so sort
-        if needed."""
+        Blocks from different build chunks or buckets may interleave doc
+        ranges, so sort if needed."""
         if self._all is not None:
             return self._all
         if not len(self.ns):

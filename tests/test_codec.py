@@ -1,15 +1,19 @@
 """Posting codec: golden encodings + seeded round-trip properties (FIXTURES F4)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from fatespark.codec import (
+    _i64_to_u64_ordered,
     decode_positions,
     decode_u32s,
     delta_decode_ids,
     delta_encode_ids,
     encode_positions,
     encode_u32s,
+    get_codec,
+    segmented_delta,
     varint_decode,
     varint_encode,
 )
@@ -95,6 +99,41 @@ class TestPositions:
             np.sort(rng.choice(5000, size=t, replace=False)) for t in tfs
         ]).astype(np.int64)
         assert np.array_equal(decode_positions(encode_positions(pos, tfs), tfs), pos)
+
+    @pytest.mark.parametrize("codec", ["varint", "pfor", "ef"])
+    def test_stream_decode_interleaved_chunks(self, codec):
+        """One (term, field) stream whose blocks come from two build chunks
+        with interleaved doc ranges: the bulk decode returns doc-sorted
+        postings, each doc with its own positions."""
+        from fatespark.query import _decode_with_positions
+        rng = np.random.default_rng(5)
+        ids = np.unique(rng.integers(-2**63, 2**63 - 1, size=300,
+                                     dtype=np.int64))
+        tfs = rng.integers(1, 6, size=ids.size).astype(np.int64)
+        dls = tfs + rng.integers(0, 50, size=ids.size)
+        pos = [np.sort(rng.choice(int(d), size=int(t), replace=False))
+               for t, d in zip(tfs, dls)]
+        c, one = get_codec(codec), np.zeros(1, dtype=np.int64)
+        rows = []
+        for chunk in (np.arange(0, ids.size, 2), np.arange(1, ids.size, 2)):
+            for blk in np.array_split(chunk, range(16, chunk.size, 16)):
+                u = _i64_to_u64_ordered(ids[blk])
+                rows.append({
+                    "n": blk.size,
+                    "docs": c.encode_grouped(segmented_delta(u, one), one)[0],
+                    "tfs": c.encode_grouped(tfs[blk].astype(np.uint64),
+                                            one)[0],
+                    "dls": c.encode_grouped(dls[blk].astype(np.uint64),
+                                            one)[0],
+                    "poss": encode_positions(
+                        np.concatenate([pos[i] for i in blk]), tfs[blk])})
+        got = _decode_with_positions(pd.DataFrame(rows), codec)
+        assert np.array_equal(got["docs"], ids)
+        assert np.array_equal(got["tfs"], tfs)
+        assert np.array_equal(got["dls"], dls)
+        assert np.array_equal(got["poss"], np.concatenate(pos))
+        assert np.array_equal(got["tok_starts"],
+                              np.concatenate(([0], np.cumsum(tfs))))
 
     def test_empty(self):
         tfs = np.array([], dtype=np.int64)
