@@ -27,9 +27,11 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -387,9 +389,12 @@ class IndexBuilder:
         }])
         # publish marker: written last, required by SearchIndex.load; the
         # snapshot commit (Iceberg-commit analogue) follows it and pins the
-        # exact physical paths of this published state for time travel
+        # exact physical paths of this published state for time travel.
+        # The local serving copy describes the replaced postings: drop it
+        # (re-create via compact_local).
         _write_local_parquet(meta, self._p("meta"), mode="overwrite")
         _snap.commit(self.index_dir, operation, build_id)
+        shutil.rmtree(self._p("postings_local"), ignore_errors=True)
 
     # -- deletes + vacuum ---------------------------------------------------
     def delete_docs(self, spark: SparkSession, doc_ids) -> None:
@@ -424,7 +429,6 @@ class IndexBuilder:
         stats re-finalized, tombstones cleared. The Lucene-forceMerge-style
         compaction the reference's fragment model never got."""
         import numpy as np
-        import shutil
         cfg = self.config
         ts = self.tombstones()
         drop = np.sort(ts.to_numpy(np.int64)) if ts is not None else \
@@ -459,14 +463,13 @@ class IndexBuilder:
         # swap in the rewritten chunkless dirs; the replaced state is
         # ARCHIVED, not deleted — older snapshots (including the pre-vacuum
         # tombstoned view and its chunk lineage) stay time-travel-readable
-        # until snapshots.expire. postings_local is a derived serving copy,
-        # re-creatable via compact_local, so it is simply dropped.
+        # until snapshots.expire. _finalize drops the derived serving copy
+        # postings_local (re-creatable via compact_local).
         from . import snapshots as _snap
         _snap.archive(self.index_dir, ["postings", "docs", "tombstones",
                                        "manifest", "bucket_metrics"])
         for name in ("postings", "docs"):
             os.rename(self._p(f"{name}_new"), self._p(name))
-        shutil.rmtree(self._p("postings_local"), ignore_errors=True)
 
         self._finalize(spark, build_id=build_id, n_chunks=1, n_fields=nf,
                        codec=mc, operation="vacuum")
@@ -498,7 +501,6 @@ class IndexBuilder:
         hash), which ``merge_segments`` handles — the same pseudo-segment
         path vacuum uses, one hash shuffle over only the merged chunks'
         blocks."""
-        import shutil
         cfg = self.config
         blocks_root = self._p("postings")
         chunk_dirs = sorted(glob.glob(os.path.join(blocks_root, "chunk=*")))
@@ -565,25 +567,46 @@ class IndexBuilder:
             return "varint"
         return str(m.iloc[0]["codec"] or "varint")
 
-    def compact_local(self, spark: SparkSession,
-                      rg_bytes: int = 1 << 20) -> None:
-        """Write the read-optimized serving copy ``postings_local/``:
-        term-range-clustered files with small (~1 MB) row groups, so a
-        point-term lookup touches only the row groups whose min/max term
-        stats cover it. The BUILD keeps hash partitioning (head-term skew
-        stays bounded by bucket×salt); this second, cheap pass over the
-        already-compressed blocks trades one extra job for millisecond
-        local reads (``fatespark.local.LocalSearchIndex``) — the analogue of
-        the reference's read-optimized index file + sampled inline suffix
-        index (``lib/suffix_array_writer.rb:88-92``). On a 10^12-doc corpus
-        this is the per-serving-shard compaction, not a global rewrite."""
-        cfg = self.config
-        blocks = spark.read.parquet(self._p("postings"))
-        (blocks.repartitionByRange(max(1, cfg.n_buckets), "term", "field",
-                                   "bucket")
-         .sortWithinPartitions("term", "field", "bucket", "first_doc")
-         .write.mode("overwrite")
-         .option("parquet.block.size", rg_bytes)
-         .parquet(self._p("postings_local")))
+    def compact_local(self, spark: SparkSession) -> None:
+        """Write the local reader's serving copy ``postings_local/`` (see
+        ``fatespark.serving``): one doc-ordered stream per (term, field)
+        across every bucket and chunk, re-blocked at 128 postings, in one
+        uncompressed Arrow IPC file sorted by (term, field, first_doc) and
+        stamped with the current snapshot id. One Spark job range-partitions
+        the blocks by term and merges each stream in the Python workers
+        (``serving.serving_runs``) into temporary uncompressed parquet; the
+        driver streams that into the IPC file batch by batch and publishes
+        it atomically. The BUILD keeps hash partitioning (head-term skew
+        stays bounded by bucket×salt); this is the analogue of the
+        reference's read-optimized index file + sampled inline suffix index
+        (``lib/suffix_array_writer.rb:88-92``)."""
+        import pyarrow.parquet as pq
+        from . import serving
+        from . import snapshots as _snap
+        sid = _snap.current_id(self.index_dir)
+        codec = self.meta_codec(spark)
+        blocks = spark.read.parquet(self._p("postings")) \
+            .select(*serving.IN_COLS)
+        merged = (blocks.repartitionByRange(max(1, self.config.n_buckets),
+                                            "term")
+                  .sortWithinPartitions(*serving.IN_SORT)
+                  .mapInPandas(partial(serving.serving_runs, codec=codec),
+                               schema=serving.SERVING_SCHEMA))
+        tmp = self._p(f"{serving.DIRNAME}_tmp-{uuid.uuid4().hex}")
+        try:
+            merged.write.option("compression", "uncompressed").parquet(tmp)
+            # part files are named by partition id: file order is term order.
+            # Small single-threaded reads without pre-buffering keep the
+            # driver's peak memory to about one batch.
+            parts = sorted(glob.glob(os.path.join(tmp, "part-*.parquet")))
+            serving.write(
+                self.index_dir,
+                (rb for f in parts
+                 for rb in pq.ParquetFile(f, pre_buffer=False,
+                                          buffer_size=1 << 16)
+                 .iter_batches(batch_size=512, use_threads=False)),
+                sid)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
         from .sidecars import stamp
-        stamp(self.index_dir, "postings_local")
+        stamp(self.index_dir, serving.DIRNAME)

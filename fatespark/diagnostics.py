@@ -3,7 +3,8 @@
 ``index_stats`` reads footers/metadata only (pyarrow) — cheap even on large
 indexes — and reports the numbers an operator needs to sanity-check a build
 or plan capacity (CLUSTER.md): corpus stats, codec, chunk lineage, posting
-and block counts, encoded bytes/posting, head terms, and per-bucket skew.
+and block counts, encoded bytes/posting, head terms, per-bucket skew, and
+the local reader's serving copy (blocks, postings, bytes/posting).
 """
 
 from __future__ import annotations
@@ -43,9 +44,19 @@ def index_stats(index_dir: str, top_terms: int = 10) -> dict:
         "build_id": meta.get("build_id"),
         "disk_bytes": {
             name: _du(os.path.join(index_dir, name))
-            for name in ("postings", "docs", "terms", "postings_local")
+            for name in ("postings", "docs", "terms")
         },
     }
+
+    # the local reader's serving copy (fatespark.serving), reported apart
+    # from postings/: one stream per (term, field) in one Arrow IPC file
+    from . import serving
+    from . import snapshots as _snap
+    sv = serving.stats(index_dir)
+    if sv is not None:
+        sv["current"] = sv["snapshot_id"] == _snap.current_id(index_dir)
+    out["serving"] = sv
+    out["disk_bytes"]["postings_local"] = sv["bytes"] if sv else 0
 
     # terms table: vocabulary size + head terms (columnar read, two columns)
     tf = sorted(glob.glob(os.path.join(index_dir, "terms", "**",

@@ -1,24 +1,26 @@
-"""Driver-local query path: the same index, read via pyarrow with predicate
-pushdown and scored by the SAME numpy kernels — no Spark jobs, so query
-latency is milliseconds instead of the ~0.3 s Spark scheduling floor.
+"""Driver-local query path: the same index, read via pyarrow and scored by
+the SAME numpy kernels — no Spark jobs, so query latency is milliseconds
+instead of the ~0.3 s Spark scheduling floor.
 
 This is the Spark-era analogue of the reference's in-memory readers
 (``lib/suffix_array_reader.rb:97-113`` loads header + inline suffixes once,
 then answers in µs): open once, then ``count``/``search``/``search_prefix``
-answer from local reads. Use it for interactive lookups against small/medium
+answer from memory. Use it for interactive lookups against small/medium
 indexes or a hot shard; the distributed ``SearchIndex`` path is the one that
 scales to the full corpus (both produce IDENTICAL results — tested).
 
-Run ``IndexBuilder.compact_local(spark)`` once after the build to lay down
-the term-range-clustered serving copy (``postings_local/``) — the raw build
-output is hash-partitioned for merge skew, so without the serving copy every
-query scans all row groups. ``use_wand=True`` uses the same interval-at-a-
-time block-vectorized BMW kernel as the distributed scorer; it pays off once
-the posting lists are long enough that whole blocks prune (head-term ORs).
-
-Reads are row-group pruned via footer min/max statistics collected once at
-open (``_RGIndex``); on the serving copy a point-term lookup touches only
-the ~1 MB row groups whose term range covers it."""
+At open the reader loads the ``terms/`` table into sorted arrays (term
+stats, counts and prefix/fuzzy expansion are ``searchsorted`` lookups) and
+memory-maps the serving copy (``fatespark.serving``): one doc-ordered
+stream per (term, field), blocked at 128 postings, sorted by
+(term, field, first_doc). A query's postings are row slices of that file —
+no row-group scan, no filter, no query-time re-block. Run
+``IndexBuilder.compact_local(spark)`` once after a build to write the copy;
+without a copy for the snapshot being read (never compacted, a stale copy,
+a pinned ``snapshot_id``/``as_of``), the reader builds the same layout in
+memory at open. Tombstones apply at query time. ``use_wand=True`` uses the
+same interval-at-a-time block-vectorized BMW kernel as the distributed
+scorer."""
 
 from __future__ import annotations
 
@@ -30,6 +32,7 @@ import os
 import numpy as np
 import pandas as pd
 
+from . import serving
 from .analysis import ANALYZERS, ascii_fold
 from .oracle import idf as idf_fn
 from .query import _fold_terms, _sq, _term_blocks_from_pdf
@@ -39,10 +42,9 @@ from .wand import (score_and, score_bmw_or, score_exhaustive_or,
 
 class _RGIndex:
     """Row-group skip index over a parquet directory, keyed by a string
-    column's min/max statistics. Footers are read ONCE at open; a lookup
-    touches only the row groups whose [min, max] range covers a key — the
-    Spark-free analogue of the reference's sampled inline-suffix index
-    loaded by its reader at open (``lib/suffix_array_reader.rb:176-191``)."""
+    column's min/max statistics (the persisted fuzzy-variant table). Footers
+    are read ONCE at open; a lookup touches only the row groups whose
+    [min, max] range covers a key."""
 
     def __init__(self, path: str | list[str], key: str):
         import pyarrow.parquet as pq
@@ -161,34 +163,48 @@ class LocalSearchIndex:
             self.tombstones = None
         self.index_dir = index_dir
         self._fuzzy_local: tuple | None = None  # lazy (_RGIndex, depth)
-        self._terms_ix = _RGIndex(src("terms"), "term")
-        # prefer the term-range-clustered serving copy (IndexBuilder.
-        # compact_local): the raw build output is hash-partitioned for merge
-        # skew, so its per-file term min/max spans ~everything and the skip
-        # index cannot prune. Snapshot reads pin the committed postings
-        # paths directly (the serving copy tracks only the current state).
-        post: str | list[str] = os.path.join(index_dir, "postings_local")
-        if self._paths is not None:
-            post = self._paths.get("postings", [])
-        elif not glob.glob(os.path.join(post, "**", "*.parquet"),
-                           recursive=True):
-            post = os.path.join(index_dir, "postings")
-        self._post_ix = _RGIndex(post, "term")
-        # the docs file list is resolved once, like the skip indexes above
+        self._load_terms(src("terms"))
+        # the serving copy stamped at the snapshot being read, else the
+        # same layout built in memory from that snapshot's postings
+        from . import snapshots as _snap
+        sid = self.snapshot_id if self._paths is not None \
+            else _snap.current_id(index_dir)
+        table = serving.load(index_dir, sid)
+        if table is None:
+            table = serving.build(src("postings"), self.codec_name)
+        self._post = serving.Streams(table)
+        # the docs file list is resolved once, like the arrays above
         self._docs_files = sorted(
             f for d in src("docs")
             for f in glob.glob(os.path.join(d, "**", "*.parquet"),
                                recursive=True))
         self._docs_ds = None  # pyarrow dataset, built on first urls_of
 
+    def _load_terms(self, roots: list[str]) -> None:
+        """The terms table as arrays sorted by (term, field)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        cols = ["term", "field", "df", "cf", "max_tf"]
+        files = sorted(f for r in roots for f in glob.glob(
+            os.path.join(r, "**", "*.parquet"), recursive=True))
+        t = pa.concat_tables([pq.ParquetFile(f).read(columns=cols)
+                              for f in files]) if files else \
+            pa.table({c: pa.array([], pa.string() if c == "term"
+                                   else pa.int64()) for c in cols})
+        t = t.sort_by([("term", "ascending"), ("field", "ascending")])
+        self._t_term = t.column("term").to_numpy()
+        self._t_field, self._t_df, self._t_cf, self._t_max_tf = (
+            np.asarray(t.column(c), dtype=np.int64) for c in cols[1:])
+        self._t_len = None  # term lengths, on first fuzzy scan
+
     # -- stats --------------------------------------------------------------
     def term_stats(self, terms: list[str]) -> dict[str, dict]:
-        t = self._terms_ix.read(list(terms),
-                                ["term", "field", "df", "cf", "max_tf"])
         out: dict[str, dict] = {}
-        for r in t.itertuples():
-            out.setdefault(r.term, {})[int(r.field)] = {
-                "df": int(r.df), "cf": int(r.cf), "max_tf": int(r.max_tf)}
+        for t in set(terms):
+            for i in serving.key_range(self._t_term, t):
+                out.setdefault(t, {})[int(self._t_field[i])] = {
+                    "df": int(self._t_df[i]), "cf": int(self._t_cf[i]),
+                    "max_tf": int(self._t_max_tf[i])}
         return out
 
     def count(self, term: str, field: int | None = None) -> int:
@@ -224,9 +240,8 @@ class LocalSearchIndex:
             {"term": pd.array([], dtype="string"),
              "field": pd.array([], dtype="int64")}), self.codec_name, None)
         if present:
-            pdf = self._post_ix.read(
-                present, ["bucket", "term", "field", "n", "docs", "tfs",
-                          "dls", "poss"])
+            pdf = self._post.frame(present, ["term", "field", "n", "docs",
+                                             "tfs", "dls", "poss"])
             frames = _hit_frames(pdf, self.codec_name, self.tombstones)
         out = pd.concat(frames, ignore_index=True)
         return out.sort_values(["doc_id", "field", "position", "term"],
@@ -245,15 +260,12 @@ class LocalSearchIndex:
         present = sorted(set(qterms) & set(self.term_stats(qterms)))
         if not present or (mode == "AND" and len(present) < len(qterms)):
             return empty
-        pdf = self._post_ix.read(present, ["bucket", "term", "n", "docs"])
+        pdf = self._post.frame(present, ["term", "n", "docs"])
         need_all = frozenset(present) if mode == "AND" else None
         out = _matched_ids(pdf, self.codec_name, self.tombstones, need_all)
         return pd.DataFrame({"doc_id": np.sort(out)})
 
     # -- search -------------------------------------------------------------
-    def _blocks(self, terms: list[str]) -> pd.DataFrame:
-        return self._post_ix.read(list(terms), _BLOCK_COLS)
-
     def urls_of(self, doc_ids: list[int]) -> dict[int, str]:
         """doc_id -> url from the docs table (pyarrow dataset filter with
         row-group statistics pushdown; result sets are top-k sized)."""
@@ -351,8 +363,7 @@ class LocalSearchIndex:
                     for (t, f) in idfs}
         else:
             sims = None
-        streams = _streams(self._blocks(
-            sorted(set(present + xpresent + fpresent))))
+        streams = self._post.streams(present + xpresent + fpresent)
         xset, fset = frozenset(xpresent), frozenset(fpresent)
         allowed = None
         if fset:
@@ -407,7 +418,7 @@ class LocalSearchIndex:
                 [u.get(int(d)) for d in out["doc_id"]], dtype=object))
         return out
 
-    def _stream_docs(self, g: pd.DataFrame) -> np.ndarray:
+    def _stream_docs(self, g: serving.Rows) -> np.ndarray:
         """Sorted doc ids of one (term, field) stream."""
         return _term_blocks_from_pdf(g, 0.0, self.avgdl,
                                      self.codec_name).decode_all()[0]
@@ -430,17 +441,13 @@ class LocalSearchIndex:
 
     def count_prefix(self, prefix: str) -> int:
         """Exact, uncapped occurrence count of tokens starting with
-        ``prefix`` — sums cf over the terms-table row groups in range
+        ``prefix`` — sums cf over the sorted terms-table range
         (local twin of ``SearchIndex.count_prefix``)."""
         p = ascii_fold(prefix)
         if not p:
             return 0
-        hi = p[:-1] + chr(ord(p[-1]) + 1)
-        t = self._terms_ix.read_range(p, hi, ["term", "cf"])
-        if not len(t):
-            return 0
-        keep = t["term"].astype(str).str.startswith(p)
-        return int(t.loc[keep, "cf"].sum())
+        r = _prefix_range(self._t_term, p)
+        return int(self._t_cf[r.start:r.stop].sum())
 
     def _phrase_match_rows(self, variants: list[list[str]],
                            max_end: int | None = None,
@@ -467,8 +474,7 @@ class LocalSearchIndex:
     def _field_rows(self, terms: list[str], match) -> pd.DataFrame | None:
         """(doc_id, field, tf, dl): ``match`` applied to each field's
         decoded positions of ``terms``, over all buckets at once."""
-        by_field = self._positions(_streams(
-            self._post_ix.read(terms, _POS_COLS)))
+        by_field = self._positions(self._post.streams(terms))
         frames = [m.assign(field=np.int32(fid)) for fid in sorted(by_field)
                   if (m := match(by_field[fid])) is not None]
         if not frames:
@@ -502,7 +508,7 @@ class LocalSearchIndex:
         """Consecutive-token phrase over positions — identical semantics to
         ``SearchIndex.search_phrase`` (phrase scored as a pseudo-term with
         per-field df/idf; a phrase never crosses a field boundary), answered
-        from local row-group-pruned reads."""
+        from the serving copy's row slices."""
         m = self._phrase_match_rows(self._phrase_variants(phrase))
         if m is None:
             return _empty_result()
@@ -642,7 +648,7 @@ class LocalSearchIndex:
         idfs = {(t, f): w[f] * idf_fn(self.n_docs, st["df"])
                 for t in uniq for f, st in stats[t].items()
                 if f < len(w) and w[f] != 0.0}
-        streams = _streams(self._post_ix.read(uniq, _BLOCK_COLS + ["poss"]))
+        streams = self._post.streams(uniq)
         allowed = []
         for data in self._positions(streams).values():
             if all(t in data for t in uniq):
@@ -706,9 +712,8 @@ class LocalSearchIndex:
         p = ascii_fold(prefix)
         if not p:
             return []
-        hi = p[:-1] + chr(ord(p[-1]) + 1)
-        t = self._terms_ix.read_range(p, hi, ["term"])
-        terms = sorted({x for x in t["term"] if x.startswith(p)})
+        r = _prefix_range(self._t_term, p)
+        terms = sorted(set(self._t_term[r.start:r.stop]))
         return terms if max_terms is None else terms[:max_terms]
 
     def search_prefix(self, prefix: str, k: int = 10, max_terms: int = 256,
@@ -724,11 +729,10 @@ class LocalSearchIndex:
         2) of ``term`` — reader-parity twin of ``suggest.expand_fuzzy``.
         An edit anywhere in the term defeats the sorted-term skip index (a
         substitution at position 0 lands anywhere in the dictionary), so
-        this reads the term column of the compact serving copy once —
-        driver-local by design, same budget class as the reader's other
-        dictionary scans — then length-window prunes and exact-verifies
-        the sliver. Same ``max_terms`` cap order as the distributed path
-        (distance ASC, df DESC, term ASC)."""
+        without a persisted banded dictionary this length-window prunes the
+        in-memory term array and exact-verifies the sliver. Same
+        ``max_terms`` cap order as the distributed path (distance ASC, df
+        DESC, term ASC)."""
         if max_edit not in (1, 2):
             raise ValueError("expand_fuzzy supports max_edit in (1, 2)")
         q = ascii_fold(term)
@@ -736,13 +740,12 @@ class LocalSearchIndex:
             return []
         best = self._fuzzy_probe(q, max_edit)
         if best is None:
-            # no persisted banded dictionary: scan the term column once,
-            # length-window prune, exact-verify the sliver
-            t = self._terms_ix.read_range("", "\U0010ffff", ["term", "df"])
+            if self._t_len is None:
+                self._t_len = np.fromiter(map(len, self._t_term), np.int64,
+                                          self._t_term.size)
+            near = np.flatnonzero(np.abs(self._t_len - len(q)) <= max_edit)
             best = {}
-            for s, df in zip(t["term"], t["df"]):
-                if abs(len(s) - len(q)) > max_edit:
-                    continue
+            for s, df in zip(self._t_term[near], self._t_df[near]):
                 d = _lev_banded(q, s, max_edit)
                 if d > max_edit:
                     continue
@@ -840,18 +843,12 @@ def _lev_banded(a: str, b: str, d: int) -> int:
     return prev[lb] if prev[lb] <= d else big
 
 
-_BLOCK_COLS = ["term", "field", "n", "first_doc", "last_doc", "max_tf",
-               "min_dl", "docs", "tfs", "dls"]
-_POS_COLS = ["term", "field", "n", "docs", "tfs", "dls", "poss"]
-
-
-def _streams(pdf: pd.DataFrame) -> dict[tuple[str, int], pd.DataFrame]:
-    """(term, field) -> that stream's block rows from every bucket and
-    chunk, in ascending (term, field) order. Every doc lives in exactly one
-    bucket and scores use global idf/avgdl, so one stream over all buckets
-    answers exactly what a per-bucket pass would."""
-    return {(t, int(f)): g
-            for (t, f), g in pdf.groupby(["term", "field"], sort=True)}
+def _prefix_range(sorted_terms: np.ndarray, p: str) -> range:
+    """Indices of the terms starting with ``p`` in a sorted term array:
+    every string in [p, p with its last char incremented) has prefix p."""
+    hi = p[:-1] + chr(ord(p[-1]) + 1)
+    return range(int(np.searchsorted(sorted_terms, p, "left")),
+                 int(np.searchsorted(sorted_terms, hi, "left")))
 
 
 def _empty_result(with_url: bool = False) -> pd.DataFrame:

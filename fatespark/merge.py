@@ -230,6 +230,39 @@ def merge_group_pandas(pdf: pd.DataFrame, block_size: int = 128,
                                  on_duplicate)
 
 
+def merge_runs(batches: Iterator[pd.DataFrame], key: list[str],
+               block_size: int = 128, on_duplicate: str = "error",
+               drop_docs: np.ndarray | None = None,
+               in_codec: str = "varint",
+               out_codec: str = "varint") -> Iterator[pd.DataFrame]:
+    """Stream ``merge_rows_vectorized`` over batches that are contiguous
+    in ``key``. A key's rows MAY split across batches, so the trailing key
+    of each batch is held back and prepended to the next (carry), and
+    flushed at the end. Each key's rows are therefore merged in one call,
+    so block boundaries never depend on where the batches were cut."""
+    carry: pd.DataFrame | None = None
+    for pdf in batches:
+        if carry is not None and len(carry):
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+            carry = None
+        if len(pdf) == 0:
+            continue
+        tail = np.ones(len(pdf), dtype=bool)
+        for c in key:
+            tail &= (pdf[c] == pdf[c].iloc[-1]).to_numpy()
+        # hold back the (possibly batch-spanning) last key
+        cut = int(len(pdf) - tail[::-1].cumprod().sum())
+        carry = pdf.iloc[cut:].reset_index(drop=True)
+        head = pdf.iloc[:cut]
+        if len(head):
+            yield merge_rows_vectorized(head.reset_index(drop=True),
+                                        block_size, on_duplicate,
+                                        drop_docs, in_codec, out_codec)
+    if carry is not None and len(carry):
+        yield merge_rows_vectorized(carry, block_size, on_duplicate,
+                                    drop_docs, in_codec, out_codec)
+
+
 def merge_segments(segments, block_size: int = 128,
                    on_duplicate: str = "error",
                    num_partitions: int | None = None,
@@ -239,35 +272,13 @@ def merge_segments(segments, block_size: int = 128,
     """segments DataFrame -> posting-block DataFrame.
 
     One hash shuffle on (bucket, term, salt), JVM sort within partitions,
-    then a streaming mapInPandas merge. Rows of one key never split across
-    partitions (hash repartition); they MAY split across Arrow batches, so
-    the merger holds back the trailing key of each batch and prepends it to
-    the next (carry), flushing at end-of-partition."""
+    then a streaming mapInPandas merge (``merge_runs``). Rows of one key
+    never split across partitions (hash repartition)."""
     key = ["bucket", "term", "field", "salt"]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            lb, lt, lf, ls = (pdf["bucket"].iloc[-1], pdf["term"].iloc[-1],
-                              pdf["field"].iloc[-1], pdf["salt"].iloc[-1])
-            tail = ((pdf["bucket"] == lb) & (pdf["term"] == lt)
-                    & (pdf["field"] == lf) & (pdf["salt"] == ls))
-            # hold back the (possibly batch-spanning) last key
-            cut = int(len(pdf) - tail[::-1].cumprod().sum())
-            carry = pdf.iloc[cut:].reset_index(drop=True)
-            head = pdf.iloc[:cut]
-            if len(head):
-                yield merge_rows_vectorized(head.reset_index(drop=True),
-                                            block_size, on_duplicate,
-                                            drop_docs, in_codec, out_codec)
-        if carry is not None and len(carry):
-            yield merge_rows_vectorized(carry, block_size, on_duplicate,
-                                        drop_docs, in_codec, out_codec)
+        return merge_runs(batches, key, block_size, on_duplicate, drop_docs,
+                          in_codec, out_codec)
 
     parts = segments.repartition(num_partitions, *key) if num_partitions \
         else segments.repartition(*key)

@@ -78,13 +78,12 @@ def _sq(x: float) -> float:
 def _term_blocks_from_pdf(g: pd.DataFrame, idf: float, avgdl: float = 0.0,
                           codec: str = "varint",
                           sim: tuple | None = None) -> TermBlocks:
+    """One stream's ``TermBlocks`` from its block rows: a pandas frame, or
+    any mapping of block columns to arrays (``serving.Rows``)."""
     return TermBlocks(
-        idf,
-        g["first_doc"].to_numpy(np.int64), g["last_doc"].to_numpy(np.int64),
-        g["n"].to_numpy(np.int64), g["max_tf"].to_numpy(np.int64),
-        g["min_dl"].to_numpy(np.int64),
-        list(g["docs"]), list(g["tfs"]), list(g["dls"]), avgdl=avgdl,
-        codec=codec, sim=sim)
+        idf, g["first_doc"], g["last_doc"], g["n"], g["max_tf"],
+        g["min_dl"], list(g["docs"]), list(g["tfs"]), list(g["dls"]),
+        avgdl=avgdl, codec=codec, sim=sim)
 
 
 class SearchIndex:
@@ -2324,7 +2323,7 @@ def _decode_with_positions(g: pd.DataFrame, codec: str = "varint") -> dict:
     varint stream cut at doc starts. Positions are always varint;
     docs/tfs/dls use the index codec."""
     c = get_codec(codec)
-    ns = g["n"].to_numpy(np.int64)
+    ns = np.asarray(g["n"], dtype=np.int64)
     total = int(ns.sum())
     starts = np.zeros(ns.size, dtype=np.int64)
     np.cumsum(ns[:-1], out=starts[1:])

@@ -4,7 +4,7 @@ serving table that lives NEXT TO the index rather than inside a snapshot.
 The engine's index proper is snapshot-consistent (``snapshots.py``
 commits, time travel, expire). Its SIDECARS are not: the banded fuzzy
 dictionary (``suggest.write_fuzzy_variants``), the phrase-suggester LM
-(``phrasesuggest.write_bigram_lm``), the term-clustered local serving
+(``phrasesuggest.write_bigram_lm``), the local reader's serving
 copy (``IndexBuilder.compact_local``) and any persisted ANN/char index
 are derived tables that track the CURRENT state and silently keep
 serving old data after a delete + vacuum or an incremental build. Each

@@ -1,6 +1,8 @@
 """LocalSearchIndex (pyarrow, no Spark jobs) must return IDENTICAL results
 to the distributed SearchIndex — same kernels, same total order."""
 
+import os
+
 import pytest
 
 from fatespark.build import BuildConfig, IndexBuilder
@@ -142,6 +144,9 @@ def test_index_stats_diagnostics(pages_idx, tmp_root):
     assert s["bucket_skew"]["max_over_mean"] < 2.0
     assert s["snapshots"]["current_id"] == s["snapshots"]["n"] >= 1
     assert s["snapshots"]["operations"][-1]["op"] in ("build", "vacuum")
+    # never compacted: no serving copy on disk
+    assert s["serving"] is None
+    assert s["disk_bytes"]["postings_local"] == 0
 
 
 def test_matching_docs_matches_distributed(pages_idx):
@@ -256,3 +261,145 @@ def test_chunked_tombstoned_search_after(chunked_idx):
                              use_wand=True, search_after=cursor))
         assert a and a == b
         cursor = (a[-1][1], a[-1][0])
+
+
+# -- serving copy (IndexBuilder.compact_local) --------------------------------
+
+@pytest.fixture(scope="module")
+def compacted_chunked(spark, tmp_root, chunked_idx):
+    """A copy of ``chunked_idx`` with its serving copy written, next to the
+    uncompacted original (whose reader builds the layout at open)."""
+    import shutil
+    dist, loc, victims = chunked_idx
+    d = str(tmp_root / "local_chunked_compacted")
+    shutil.copytree(dist.index_dir, d)
+    IndexBuilder(d, BuildConfig(n_buckets=4, salt_bits=1)).compact_local(spark)
+    return dist, loc, LocalSearchIndex(d), victims
+
+
+@pytest.mark.parametrize("case", sorted(CHUNKED_CASES))
+def test_compacted_parity(compacted_chunked, case):
+    dist, loc, comp, victims = compacted_chunked
+    a = _rows(CHUNKED_CASES[case](dist))
+    assert a, "fixture must produce matches"
+    assert _rows(CHUNKED_CASES[case](loc)) == a
+    assert _rows(CHUNKED_CASES[case](comp)) == a
+    assert not set(victims) & {d for d, _ in a}
+
+
+def test_compacted_search_after(compacted_chunked):
+    dist, loc, comp, _ = compacted_chunked
+    cursor = None
+    for _ in range(3):
+        kw = dict(k=4, mode="OR", use_wand=True, search_after=cursor)
+        a = _rows(dist.search(["the", "big"], **kw))
+        assert a
+        assert _rows(loc.search(["the", "big"], **kw)) == a
+        assert _rows(comp.search(["the", "big"], **kw)) == a
+        cursor = (a[-1][1], a[-1][0])
+
+
+def test_compacted_reads_slices_only(compacted_chunked, monkeypatch):
+    """A compacted reader opens the file without rebuilding it, and its
+    queries neither scan parquet row groups nor re-block a stream."""
+    import fatespark.local as local
+    import fatespark.serving as serving
+    from fatespark.wand import TermBlocks
+    dist, _, comp, _ = compacted_chunked
+
+    def boom(*args, **kwargs):
+        raise AssertionError("not on the serving path")
+
+    monkeypatch.setattr(TermBlocks, "_reblock", boom)
+    monkeypatch.setattr(local._RGIndex, "read", boom)
+    monkeypatch.setattr(serving, "build", boom)
+    fresh = LocalSearchIndex(comp.index_dir)
+    for case in sorted(CHUNKED_CASES):
+        assert _rows(CHUNKED_CASES[case](fresh)) == \
+            _rows(CHUNKED_CASES[case](comp)), case
+    assert fresh.count("the") == dist.count("the")
+    assert fresh.count_prefix("bi") == dist.count_prefix("bi")
+    assert fresh.expand_prefix("bi") == dist.expand_prefix("bi")
+    assert fresh.matching_docs(["big", "array"], "AND")["doc_id"].tolist() \
+        == sorted(r["doc_id"] for r in
+                  dist.matching_docs(["big", "array"], "AND").collect())
+
+
+def test_index_stats_reports_serving_copy(compacted_chunked):
+    from fatespark.diagnostics import index_stats
+    _, _, comp, _ = compacted_chunked
+    s = index_stats(comp.index_dir)
+    sv = s["serving"]
+    assert sv["n_postings"] == s["n_postings"]
+    # one stream per (term, field): far fewer blocks than bucket x salt
+    assert 0 < sv["n_blocks"] < s["n_blocks"]
+    assert 0 < sv["bytes_per_posting"] < 64
+    assert sv["current"]
+    assert s["disk_bytes"]["postings_local"] == sv["bytes"]
+
+
+def _top(ix, terms=("the", "smith"), k=5):
+    return _rows(ix.search(list(terms), k=k, mode="OR"))
+
+
+def test_rebuild_in_place_drops_stale_copy(spark, tmp_root):
+    """Rebuilding an index in place must not leave the local reader on the
+    previous build's serving copy — neither the one compact_local wrote
+    nor a copy that survives on disk."""
+    import shutil
+    d = str(tmp_root / "local_rebuilt_idx")
+    b = IndexBuilder(d, BuildConfig(n_buckets=4, salt_bits=1))
+    b.build(spark, pages_df(spark, 2400, partitions=4), build_id="r1")
+    b.compact_local(spark)
+    old = str(tmp_root / "local_rebuilt_old_copy")
+    shutil.copytree(os.path.join(d, "postings_local"), old)
+    b.build(spark, pages_df(spark, 1200, partitions=4), build_id="r2")
+    dist = SearchIndex(spark, d)
+    loc = LocalSearchIndex(d)
+    assert loc.n_docs == dist.n_docs == 1200
+    assert _top(loc) == _top(dist)
+    # a copy stamped at an older snapshot is ignored, not served
+    shutil.rmtree(os.path.join(d, "postings_local"), ignore_errors=True)
+    shutil.copytree(old, os.path.join(d, "postings_local"))
+    assert _top(LocalSearchIndex(d)) == _top(dist)
+
+
+def test_compact_local_publishes_atomically(spark, tmp_root, monkeypatch):
+    """A compaction that fails partway leaves no half-written copy: the
+    reader keeps answering exactly as SearchIndex does, from the previous
+    copy if there is one, else from the layout built at open."""
+    import hashlib
+    import pyarrow.parquet as pq
+    import fatespark.serving as serving
+    d = str(tmp_root / "local_atomic_idx")
+    b = IndexBuilder(d, BuildConfig(n_buckets=4, salt_bits=1))
+    b.build(spark, pages_df(spark, 1500, partitions=4), build_id="at")
+    dist = SearchIndex(spark, d)
+    want = _top(dist)
+    real = pq.ParquetFile.iter_batches
+
+    def one_then_fail(self, *args, **kwargs):
+        for rb in real(self, *args, **kwargs):
+            yield rb
+            raise OSError("writer died mid-copy")
+
+    def failing_compact():
+        with monkeypatch.context() as m:
+            m.setattr(pq.ParquetFile, "iter_batches", one_then_fail)
+            with pytest.raises(OSError, match="mid-copy"):
+                b.compact_local(spark)
+        assert os.listdir(os.path.dirname(serving.path(d))) == (
+            [serving.FILENAME] if os.path.exists(serving.path(d)) else [])
+        assert not [n for n in os.listdir(d) if n.startswith(
+            serving.DIRNAME + "_tmp")]
+
+    failing_compact()
+    assert not os.path.exists(serving.path(d))
+    assert _top(LocalSearchIndex(d)) == want
+
+    b.compact_local(spark)
+    digest = hashlib.sha256(open(serving.path(d), "rb").read()).hexdigest()
+    failing_compact()
+    assert hashlib.sha256(
+        open(serving.path(d), "rb").read()).hexdigest() == digest
+    assert _top(LocalSearchIndex(d)) == want

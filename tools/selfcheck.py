@@ -8,6 +8,10 @@ the way the driver does: columns sorted by name, rows sorted, values
 stringified. Exits non-zero on any mismatch.
 
 Usage: python tools/selfcheck.py [sf_dir] [query ...]
+
+The Spark driver heap is ``SPARK_DRIVER_MEM`` when set, else half of the
+host's memory (``session.get_spark``'s 24 GB default does not fit every
+host).
 """
 
 from __future__ import annotations
@@ -52,6 +56,14 @@ def table_hash(cols, rows):
     return h.hexdigest()[:16]
 
 
+def _half_host_mem() -> str:
+    """Half of MemTotal from /proc/meminfo, as a JVM size (e.g. "7g")."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(ln.split()[1]) for ln in f
+                  if ln.startswith("MemTotal:"))
+    return f"{max(1, kb // (2 * 1024 * 1024))}g"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -59,6 +71,7 @@ def main() -> int:
     import __spark_entry__ as mod
     from fatespark.session import get_spark
 
+    os.environ.setdefault("SPARK_DRIVER_MEM", _half_host_mem())
     spark = get_spark(cpus=32, app="selfcheck")
     spark.sparkContext.setLogLevel("ERROR")
 
