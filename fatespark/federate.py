@@ -42,8 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .oracle import idf as idf_fn
-from .query import _fold_terms
+from .local import _fold_terms, plan_search
 
 __all__ = ["federated_stats", "search_federated"]
 
@@ -95,21 +94,16 @@ def search_federated(indexes, query, k: int = 10, mode: str = "OR",
     sumdl_all = sum(float(s) for ix in indexes
                     for s in ix.field_sumdl.values())
     avgdl = sumdl_all / n
-    idfs = {(t, f): idf_fn(n, d) for (t, f), d in gdf.items()}
     parts = []
     for ix in indexes:
-        st = ix.term_stats(present)
-        local = sorted(st)
-        if not local:
-            continue
-        if mode == "AND" and len(local) < len(present):
-            continue   # no doc here can hold every query term
-        # quantize INSIDE the kernels (quantize-then-rank), exactly as
-        # search() does — keeps the union-index bit-identity through ties
-        parts.append(ix._score_buckets(
-            local, {tf: v for tf, v in idfs.items() if tf[0] in st},
-            k, mode, use_wand, quantize,
-            avgdl_override=avgdl, field_avgdl_override=favg))
+        # global n/df/avgdl replace each index's own; quantize INSIDE the
+        # kernels (quantize-then-rank), exactly as search() does — keeps
+        # the union-index bit-identity through ties
+        p = plan_search(ix, query, k=k, mode=mode, quantize=quantize,
+                        use_wand=use_wand,
+                        global_stats=lambda *_: (n, avgdl, favg, gdf))
+        if p is not None:   # None: no doc here can match
+            parts.append(ix._score_buckets(p))
     if not parts:
         return indexes[0]._empty()
     out = parts[0]

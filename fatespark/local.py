@@ -1,6 +1,20 @@
-"""Driver-local query path: the same index, read via pyarrow and scored by
-the SAME numpy kernels — no Spark jobs, so query latency is milliseconds
-instead of the ~0.3 s Spark scheduling floor.
+"""Query planning and execution shared by both readers, and the
+driver-local reader that runs them with no Spark jobs, so query latency is
+milliseconds instead of the ~0.3 s Spark scheduling floor.
+
+``plan_search`` compiles ``search`` options once against a reader's
+statistics: it validates them and returns a ``Plan`` with the query,
+exclude and filter term sets, every (term, field) stream's scalar
+(field weight x idf x boost) and similarity spec, and the kernel options.
+``execute`` runs a plan over a mapping (term, field) -> block rows: it
+applies the filter, exclude and tombstone restrictions (``restrict``),
+builds ``TermBlocks`` and picks the scoring kernel (``score_streams``).
+``LocalSearchIndex`` calls it once per query over every bucket's rows;
+``SearchIndex``'s per-bucket scorers (``_score_buckets``, so also
+``federate.search_federated``; ``search_near``; ``search_many``, for the
+kernel choice) call it once per bucket. Spark-only statistics (the
+filtered-subset rebase, federated global df/avgdl) enter the planner as
+``global_stats``.
 
 This is the Spark-era analogue of the reference's in-memory readers
 (``lib/suffix_array_reader.rb:97-113`` loads header + inline suffixes once,
@@ -28,6 +42,7 @@ import math
 
 import glob
 import os
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -35,9 +50,324 @@ import pandas as pd
 from . import serving
 from .analysis import ANALYZERS, ascii_fold
 from .oracle import idf as idf_fn
-from .query import _fold_terms, _sq, _term_blocks_from_pdf
-from .wand import (score_and, score_bmw_or, score_exhaustive_or,
-                   score_maxscore_or)
+from .wand import (TermBlocks, score_and, score_bmw_or, score_dismax,
+                   score_exhaustive_or, score_maxscore_or, score_or_msm,
+                   score_or_must)
+
+SIMILARITIES = ("bm25", "classic", "lmd", "lmjm", "bm25plus")
+
+
+def _fold_terms(query: str | list[str], analyzer: str) -> list[str]:
+    """Query terms -> index-ready terms: every term runs through the SAME
+    analyzer the index was built with (fold + tokenize + stem for stemming
+    analyzers), the reference's prepared-term discipline
+    (``lib/suffix_array_reader.rb:116,128``)."""
+    tok, _ = ANALYZERS[analyzer]
+    parts = [query] if isinstance(query, str) else [t for t in query if t]
+    raw = [t for p in parts for t in tok(p)]
+    return sorted({ascii_fold(t) for t in raw})
+
+
+def _sq(x: float) -> float:
+    return x * x
+
+
+def _term_blocks_from_pdf(g, idf: float, avgdl: float = 0.0,
+                          codec: str = "varint",
+                          sim: tuple | None = None) -> TermBlocks:
+    """One stream's ``TermBlocks`` from its block rows: a pandas frame, or
+    any mapping of block columns to arrays (``serving.Rows``)."""
+    return TermBlocks(
+        idf, g["first_doc"], g["last_doc"], g["n"], g["max_tf"],
+        g["min_dl"], list(g["docs"]), list(g["tfs"]), list(g["dls"]),
+        avgdl=avgdl, codec=codec, sim=sim)
+
+
+# -- query plan and executor, shared by both readers ------------------------
+
+class Plan(NamedTuple):
+    """One compiled ``search``: which streams to read, each stream's
+    scalar and similarity, the doc-set restrictions and the kernel.
+    ``plan_search`` builds it from a reader's statistics; ``execute`` runs
+    it over every bucket at once (``LocalSearchIndex``) or over one bucket
+    (``SearchIndex``'s per-bucket scorers). It holds no reader, so a Spark
+    closure ships it to the executors as is."""
+    terms: list[str]        # scored query terms found in the dictionary
+    exclude: frozenset      # NOT-terms found in the dictionary
+    filter: frozenset       # filter terms found in the dictionary
+    filter_field: int | None
+    idfs: dict              # (term, field) -> weight * idf * boost
+    sims: dict | None       # (term, field) -> similarity spec; None: bm25
+    avgdl: float            # the kernels' fallback length norm
+    field_avgdl: dict       # field -> avgdl
+    codec: str
+    mode: str
+    k: int                  # hits each kernel call returns: k + offset
+    use_wand: bool | str
+    qmul: float | None      # quantize multiplier
+    after: tuple | None     # search_after cursor (score, doc_id)
+    msm: int | None
+    dismax_tie: float | None
+    must: frozenset
+
+    def scan_terms(self) -> list[str]:
+        """Every term whose streams the executor reads."""
+        return sorted(set(self.terms) | self.exclude | self.filter)
+
+
+def check_page(k: int, offset: int = 0, mode: str = "OR") -> None:
+    """Reject a result window or boolean mode that no reader answers."""
+    if mode not in ("AND", "OR"):
+        raise ValueError(f"mode must be AND|OR, got {mode!r}")
+    if k < 0 or offset < 0:
+        raise ValueError(f"k and offset must be >= 0 (k={k}, "
+                         f"offset={offset})")
+
+
+def plan_search(ix, query: str | list[str], k: int = 10, mode: str = "AND",
+                offset: int = 0, use_wand: bool | str = False,
+                quantize: int | None = None,
+                weights: list[float] | None = None,
+                exclude: str | list[str] | None = None,
+                filter_terms: str | list[str] | None = None,
+                filter_field: int | None = None,
+                boosts: dict[str, float] | None = None,
+                search_after: tuple[float, int] | None = None,
+                similarity: str = "bm25", mu: float = 2000.0,
+                jm_lambda: float = 0.7, delta: float = 1.0,
+                min_should_match: int | None = None,
+                must_terms: str | list[str] | None = None,
+                combine: str = "sum", tie_breaker: float = 0.0,
+                stats: dict | None = None,
+                global_stats=None) -> Plan | None:
+    """Validate ``search`` options (see ``SearchIndex.search``) and compile
+    them against reader ``ix`` — either reader: its ``analyzer``,
+    ``term_stats``, ``n_docs``, ``n_fields``, ``avgdl``, ``field_avgdl``,
+    ``field_sumdl`` and ``codec_name``. Returns None when no document can
+    match.
+
+    ``stats`` is a ``term_stats`` result that covers the query
+    (``search_many`` looks its whole batch up once). ``global_stats`` is
+    called as ``global_stats(filter_terms, filter_field, terms)`` with the
+    dictionary-resolved terms and returns ``(n_docs, avgdl, field_avgdl,
+    {(term, field): df})``, which replace the reader's own statistics: the
+    filtered-subset rebase (``SearchIndex._rebase_stats``) or federated
+    global statistics. Streams whose df is 0 there are dropped."""
+    check_page(k, offset, mode)
+    if search_after is not None and offset:
+        raise ValueError("search_after and offset are mutually "
+                         "exclusive (cursor pages replace offsets)")
+    if similarity not in SIMILARITIES:
+        raise ValueError("similarity must be " + "|".join(SIMILARITIES))
+    msm = int(min_should_match) if min_should_match else None
+    if msm is not None and msm <= 1:
+        msm = None
+    if msm is not None:
+        if mode != "OR":
+            raise ValueError("min_should_match requires mode='OR'")
+        if use_wand:
+            raise ValueError("min_should_match is exhaustive-only "
+                             "(WAND bounds ignore the match floor)")
+    if combine not in ("sum", "dismax", "cross_fields"):
+        raise ValueError("combine must be sum|dismax|cross_fields")
+    dismax_tie = None
+    if combine != "sum":
+        if mode != "OR" or use_wand or msm is not None:
+            raise ValueError(f"combine={combine!r} requires mode='OR', no "
+                             "use_wand, no min_should_match")
+        dismax_tie = float(tie_breaker)
+    if combine == "cross_fields" and (similarity != "bm25"
+                                      or global_stats is not None):
+        raise ValueError("combine='cross_fields' requires bm25 without "
+                         "rebase_stats")
+    if similarity != "bm25" and global_stats is not None:
+        raise ValueError("rebase_stats currently supports bm25 only")
+    mterms = _fold_terms(must_terms, ix.analyzer) if must_terms else []
+    if mterms and (mode != "OR" or use_wand or msm is not None
+                   or dismax_tie is not None):
+        raise ValueError("must_terms requires mode='OR' without "
+                         "use_wand/min_should_match/dismax")
+    qterms = _fold_terms(query, ix.analyzer)
+    xterms = _fold_terms(exclude, ix.analyzer) if exclude else []
+    fterms = _fold_terms(filter_terms, ix.analyzer) if filter_terms else []
+    if stats is None:
+        stats = ix.term_stats(qterms + xterms + fterms)
+    present = [t for t in qterms if t in stats]
+    if not present or (mode == "AND" and len(present) < len(qterms)):
+        return None
+    mset = set(mterms)
+    if mset - set(qterms):
+        raise ValueError("must_terms must be among the query terms")
+    if mset - set(present):
+        return None                 # a required term matches nothing
+    fpresent = sorted({t for t in fterms if t in stats})
+    if fterms and not fpresent:
+        return None                 # the filter matches no dictionary term
+    n_docs, avgdl, favg = ix.n_docs, ix.avgdl, ix.field_avgdl
+    dfs = None
+    if global_stats is not None:
+        n_docs, avgdl, favg, dfs = global_stats(fpresent, filter_field,
+                                                present)
+        if not n_docs:
+            return None
+    w = list(weights) if weights is not None else [1.0] * ix.n_fields
+    # boost keys run through the SAME analyzer as query terms (fold +
+    # tokenize + stem): on a stemming index boosts={'running': 2.0}
+    # must land on the scored term 'run', not silently no-op
+    bmap = {t: float(bv) for bt, bv in (boosts or {}).items()
+            for t in _fold_terms(bt, ix.analyzer)}
+    keys = [(t, f) for t in present for f in stats[t]
+            if f < len(w) and w[f] != 0.0
+            and (dfs is None or dfs.get((t, f), 0) > 0)]
+    blend: dict[str, int] | None = None
+    if combine == "cross_fields":
+        # BlendedTermQuery: one df per term, the max across the queried
+        # (non-zero-weight) fields, feeds every field stream's idf
+        blend = {}
+        for t, f in keys:
+            blend[t] = max(blend.get(t, 0), stats[t][f]["df"])
+        keys = [(t, f) for t, f in keys if blend[t] > 0]
+
+    def df(t: str, f: int) -> int:
+        if blend is not None:
+            return blend[t]
+        return stats[t][f]["df"] if dfs is None else dfs[(t, f)]
+
+    # (term, field) -> field weight * idf * boost: the stream's full
+    # scalar (an unboosted term multiplies by exactly 1.0: bit-identical)
+    if similarity == "classic":
+        # Lucene ClassicSimilarity: contribution =
+        # (weight * idf_c^2 * boost) * sqrt(tf)/sqrt(dl),
+        # idf_c = 1 + ln(N / (df + 1)); explicit c*c, not **2: the SQL
+        # twin multiplies the two factors, and pow(x, 2.0) is not
+        # guaranteed bit-equal to x*x
+        idfs = {(t, f): w[f]
+                * _sq(1.0 + math.log(n_docs / (df(t, f) + 1.0)))
+                * bmap.get(t, 1.0) for t, f in keys}
+    elif similarity in ("lmd", "lmjm"):
+        # LM smoothing models: idf-free; p(w|C) rides the sim spec
+        idfs = {(t, f): w[f] * bmap.get(t, 1.0) for t, f in keys}
+    else:
+        idfs = {(t, f): w[f] * idf_fn(n_docs, df(t, f)) * bmap.get(t, 1.0)
+                for t, f in keys}
+    scored = {t for t, _ in idfs}
+    if not idfs or (mode == "AND" and len(scored) < len(qterms)) \
+            or (msm is not None and len(scored) < msm):
+        return None
+    if similarity == "classic":
+        sims = {kk: ("classic",) for kk in idfs}
+    elif similarity == "bm25plus":
+        # BM25+ (Lv & Zhai 2011): contribution =
+        # (weight * idf * boost) * (bm25_part(tf, dl) + delta)
+        sims = {kk: ("bm25plus", float(delta)) for kk in idfs}
+    elif similarity in ("lmd", "lmjm"):
+        smooth = float(mu if similarity == "lmd" else jm_lambda)
+        sims = {(t, f): (similarity, smooth, stats[t][f]["cf"]
+                         / max(ix.field_sumdl.get(f, 0.0), 1.0))
+                for t, f in idfs}
+    else:
+        sims = None
+    return Plan(
+        terms=present,
+        exclude=frozenset(t for t in xterms if t in stats),
+        filter=frozenset(fpresent), filter_field=filter_field,
+        idfs=idfs, sims=sims, avgdl=avgdl, field_avgdl=favg,
+        codec=ix.codec_name, mode=mode, k=k + offset, use_wand=use_wand,
+        qmul=float(10 ** quantize) if quantize else None,
+        after=None if search_after is None
+        else (float(search_after[0]), int(search_after[1])),
+        msm=msm, dismax_tie=dismax_tie, must=frozenset(mset))
+
+
+def stream_docs(rows, codec: str) -> np.ndarray:
+    """Sorted doc ids of one (term, field) stream's block rows."""
+    return _term_blocks_from_pdf(rows, 0.0, 0.0, codec).decode_all()[0]
+
+
+def doc_set(rows, terms, codec: str,
+            field: int | None = None) -> np.ndarray | None:
+    """Sorted ids of the docs holding any of ``terms`` (in ``field``, if
+    given) in ``rows``, a mapping (term, field) -> block rows; None when
+    ``rows`` has no such stream."""
+    parts = [stream_docs(g, codec) for (t, f), g in rows.items()
+             if t in terms and (field is None or f == field)]
+    return np.unique(np.concatenate(parts)) if parts else None
+
+
+def restrict(rows, plan: Plan, tombstones,
+             keep: np.ndarray | None = None) -> dict | None:
+    """``TermBlocks`` of every scored stream in ``rows`` (a mapping
+    (term, field) -> block rows: ``serving.Rows`` or a pandas group),
+    restricted to the docs that may rank: docs holding an exclude term and
+    ``tombstones`` (sorted ids) drop; with a filter, or ``keep`` (sorted
+    ids), only those docs stay. Empty streams drop. None when the filter
+    matches no doc in ``rows``. Exclude streams never score; a filter
+    term may both filter and score."""
+    allowed = keep
+    if plan.filter:
+        allowed = doc_set(rows, plan.filter, plan.codec, plan.filter_field)
+        if allowed is None:
+            return None
+        if keep is not None:
+            allowed = np.intersect1d(allowed, keep, assume_unique=True)
+    drop = tombstones
+    excl = doc_set(rows, plan.exclude, plan.codec)
+    if excl is not None:
+        drop = excl if drop is None else np.union1d(drop, excl)
+    by_tf = {}
+    for key, g in rows.items():
+        if key[0] in plan.exclude or key not in plan.idfs:
+            continue
+        tb = _term_blocks_from_pdf(
+            g, plan.idfs[key], plan.field_avgdl.get(key[1], plan.avgdl),
+            plan.codec, sim=None if plan.sims is None else plan.sims[key])
+        if drop is not None:
+            tb = tb.without_docs(drop)
+        if allowed is not None:
+            tb = tb.keep_docs(allowed)
+        if tb.total:
+            by_tf[key] = tb
+    return by_tf
+
+
+def score_streams(by_tf: dict, plan: Plan,
+                  k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(docs, scores): the top ``k`` of ``plan``'s kernel over restricted
+    streams ``by_tf`` ((term, field) -> TermBlocks). Streams sum in
+    ascending (term, field) order in every kernel, so one call over all
+    buckets equals the merge of per-bucket calls bit for bit."""
+    keys = sorted(by_tf)
+    terms = sorted({t for t, _ in keys})
+    if not keys or (plan.mode == "AND" and len(terms) < len(plan.terms)) \
+            or not plan.must.issubset(terms):
+        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
+    avgdl, qmul, after = plan.avgdl, plan.qmul, plan.after
+    if plan.mode == "OR" and not plan.must and plan.msm is None \
+            and plan.dismax_tie is None:
+        kernel = (score_maxscore_or if plan.use_wand == "maxscore"
+                  else score_bmw_or if plan.use_wand else score_exhaustive_or)
+        return kernel([by_tf[kk] for kk in keys], avgdl, k, qmul,
+                      after=after)
+    groups = [[by_tf[kk] for kk in keys if kk[0] == t] for t in terms]
+    if plan.mode == "AND":
+        return score_and(groups, avgdl, k, qmul, after=after)
+    if plan.must:
+        return score_or_must(groups, [t in plan.must for t in terms], avgdl,
+                             k, qmul, after=after)
+    if plan.msm is not None:
+        return score_or_msm(groups, avgdl, k, plan.msm, qmul, after=after)
+    return score_dismax(groups, avgdl, k, plan.dismax_tie, qmul, after=after)
+
+
+def execute(rows, plan: Plan, tombstones, k: int,
+            keep: np.ndarray | None = None
+            ) -> tuple[np.ndarray, np.ndarray]:
+    """(docs, scores): ``plan`` run over ``rows`` — ``restrict``, then
+    ``score_streams``."""
+    by_tf = restrict(rows, plan, tombstones, keep)
+    if by_tf is None:
+        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
+    return score_streams(by_tf, plan, k)
 
 
 class _RGIndex:
@@ -86,6 +416,8 @@ class _RGIndex:
             return pd.DataFrame({c: pd.Series(dtype=object) for c in columns})
         return pa.concat_tables(tables).to_pandas()
 
+    # no caller left in fatespark; perfbench/run.py wraps it by name
+    # (--trace 1 raises KeyError without it), so it goes with that wrap
     def read_range(self, lo: str, hi: str, columns: list[str]) -> pd.DataFrame:
         """Rows with lo <= key < hi (prefix expansion)."""
         import pyarrow as pa
@@ -292,124 +624,30 @@ class LocalSearchIndex:
                similarity: str = "bm25", mu: float = 2000.0,
                jm_lambda: float = 0.7,
                delta: float = 1.0) -> pd.DataFrame:
-        """Identical semantics and results to ``SearchIndex.search`` (same
-        kernels, same (score DESC, doc_id ASC) total order); returns a
-        pandas DataFrame (doc_id, score[, url]). One pass over all buckets:
-        one stream per (term, field) and one kernel call, whose top-k is
-        the answer — bit-identical to the distributed per-bucket top-k
-        merge, since every doc lives in one bucket and sums its streams
-        with global idf/avgdl in ascending (term, field) order.
+        """Identical semantics and results to ``SearchIndex.search``: the
+        same planner (``plan_search``) and executor (``execute``), same
+        (score DESC, doc_id ASC) total order; returns a pandas DataFrame
+        (doc_id, score[, url]). One pass over all buckets: one stream per
+        (term, field) and one kernel call, whose top-k is the answer —
+        bit-identical to the distributed per-bucket top-k merge, since
+        every doc lives in one bucket and sums its streams with global
+        idf/avgdl in ascending (term, field) order.
         ``exclude`` mirrors the distributed reader: NOT-terms whose docs
         are dropped before top-k selection. ``filter_terms`` /
         ``filter_field`` mirror the index-side metadata filter (IN-list
         restriction before top-k, no score contribution); ``search_after``
         the O(k)-per-page cursor pagination (see SearchIndex.search)."""
-        if search_after is not None and offset:
-            raise ValueError("search_after and offset are mutually "
-                             "exclusive (cursor pages replace offsets)")
-        if similarity not in ("bm25", "classic", "lmd", "lmjm",
-                              "bm25plus"):
-            raise ValueError(
-                "similarity must be bm25|classic|lmd|lmjm|bm25plus")
-        qterms = _fold_terms(query, self.analyzer)
-        stats = self.term_stats(qterms)
-        present = [t for t in qterms if t in stats]
-        if not present or (mode == "AND" and len(present) < len(qterms)):
+        p = plan_search(self, query, k=k, mode=mode, offset=offset,
+                        use_wand=use_wand, quantize=quantize,
+                        weights=weights, exclude=exclude,
+                        filter_terms=filter_terms, filter_field=filter_field,
+                        boosts=boosts, search_after=search_after,
+                        similarity=similarity, mu=mu, jm_lambda=jm_lambda,
+                        delta=delta)
+        if p is None:
             return _empty_result(with_url)
-        xterms = _fold_terms(exclude, self.analyzer) if exclude else []
-        xstats = self.term_stats(xterms) if xterms else {}
-        xpresent = sorted({t for t in xterms if t in xstats})
-        fterms = _fold_terms(filter_terms, self.analyzer) if filter_terms \
-            else []
-        fstats = self.term_stats(fterms) if fterms else {}
-        fpresent = sorted({t for t in fterms if t in fstats})
-        if fterms and not fpresent:
-            return _empty_result(with_url)
-        w = list(weights) if weights is not None else [1.0] * self.n_fields
-        # boost keys run through the index analyzer, same as query terms
-        # (reader parity with SearchIndex.search)
-        bmap = {t: float(bv) for bt, bv in (boosts or {}).items()
-                for t in _fold_terms(bt, self.analyzer)}
-        if similarity == "classic":
-            # explicit c*c, not **2: the SQL twin multiplies the two
-            # factors, and pow(x, 2.0) is not guaranteed bit-equal to x*x
-            idfs = {(t, f): w[f]
-                    * _sq(1.0 + math.log(self.n_docs / (st["df"] + 1.0)))
-                    * bmap.get(t, 1.0)
-                    for t in present for f, st in stats[t].items()
-                    if f < len(w) and w[f] != 0.0}
-        elif similarity in ("lmd", "lmjm"):
-            idfs = {(t, f): w[f] * bmap.get(t, 1.0)
-                    for t in present for f, st in stats[t].items()
-                    if f < len(w) and w[f] != 0.0}
-        else:
-            idfs = {(t, f): w[f] * idf_fn(self.n_docs, st["df"])
-                    * bmap.get(t, 1.0)
-                    for t in present for f, st in stats[t].items()
-                    if f < len(w) and w[f] != 0.0}
-        if similarity == "classic":
-            sims = {tf_key: ("classic",) for tf_key in idfs}
-        elif similarity == "bm25plus":
-            sims = {tf_key: ("bm25plus", float(delta)) for tf_key in idfs}
-        elif similarity == "lmd":
-            sims = {(t, f): ("lmd", float(mu),
-                             stats[t][f]["cf"]
-                             / max(self.field_sumdl.get(f, 0.0), 1.0))
-                    for (t, f) in idfs}
-        elif similarity == "lmjm":
-            sims = {(t, f): ("lmjm", float(jm_lambda),
-                             stats[t][f]["cf"]
-                             / max(self.field_sumdl.get(f, 0.0), 1.0))
-                    for (t, f) in idfs}
-        else:
-            sims = None
-        streams = self._post.streams(present + xpresent + fpresent)
-        xset, fset = frozenset(xpresent), frozenset(fpresent)
-        allowed = None
-        if fset:
-            fparts = [self._stream_docs(g) for (t, f), g in streams.items()
-                      if t in fset
-                      and (filter_field is None or f == filter_field)]
-            if not fparts:
-                return _empty_result(with_url)
-            allowed = np.unique(np.concatenate(fparts))
-        drop = self.tombstones
-        xparts = [self._stream_docs(g) for (t, _), g in streams.items()
-                  if t in xset]
-        if xparts:
-            excl = np.unique(np.concatenate(xparts))
-            drop = excl if drop is None else np.union1d(drop, excl)
-        by_tf = {}
-        for tf_key, g in streams.items():
-            if tf_key[0] in xset or tf_key not in idfs:
-                continue
-            tb = _term_blocks_from_pdf(
-                g, idfs[tf_key], self.field_avgdl.get(tf_key[1], self.avgdl),
-                self.codec_name, sim=None if sims is None else sims[tf_key])
-            if drop is not None:
-                tb = tb.without_docs(drop)
-            if allowed is not None:
-                tb = tb.keep_docs(allowed)
-            if tb.total:
-                by_tf[tf_key] = tb
-        keys = sorted(by_tf)
-        terms_here = sorted({t for t, _ in keys})
-        if not keys or (mode == "AND" and len(terms_here) < len(present)):
-            return _empty_result(with_url)
-        qmul = float(10 ** quantize) if quantize else None
-        cursor = (float(search_after[0]), int(search_after[1])) \
-            if search_after is not None else None
-        if mode == "AND":
-            groups = [[by_tf[kk] for kk in keys if kk[0] == t]
-                      for t in terms_here]
-            docs, scores = score_and(groups, self.avgdl, k + offset, qmul,
-                                     after=cursor)
-        else:
-            kernel = (score_maxscore_or if use_wand == "maxscore"
-                      else score_bmw_or if use_wand
-                      else score_exhaustive_or)
-            docs, scores = kernel([by_tf[kk] for kk in keys], self.avgdl,
-                                  k + offset, qmul, after=cursor)
+        docs, scores = execute(self._post.streams(p.scan_terms()), p,
+                               self.tombstones, p.k)
         out = pd.DataFrame({"doc_id": docs[offset:],
                             "score": scores[offset:]})
         if with_url:
@@ -417,11 +655,6 @@ class LocalSearchIndex:
             out = out.assign(url=np.array(
                 [u.get(int(d)) for d in out["doc_id"]], dtype=object))
         return out
-
-    def _stream_docs(self, g: serving.Rows) -> np.ndarray:
-        """Sorted doc ids of one (term, field) stream."""
-        return _term_blocks_from_pdf(g, 0.0, self.avgdl,
-                                     self.codec_name).decode_all()[0]
 
     def _positions(self, streams: dict) -> dict[int, dict[str, dict]]:
         """field -> term -> decoded postings with positions: one bulk
@@ -633,49 +866,36 @@ class LocalSearchIndex:
                     weights: list[float] | None = None) -> pd.DataFrame:
         """Proximity (SLOP) search — local twin of
         ``SearchIndex.search_near``: same shared window kernel
-        (``query._near_match_docs``), same restricted conjunctive BM25
-        (``TermBlocks.keep_docs`` + ``score_and``), identical results."""
+        (``query._near_match_docs``), same plan and executor (``execute``
+        restricted to the window-matching docs), identical results."""
         from .query import _near_match_docs
         if not bool(self.meta.get("store_positions", True)):
             raise ValueError("index built without positions; proximity "
                              "search disabled")
-        qterms = _fold_terms(query, self.analyzer)
-        stats = self.term_stats(qterms)
-        if not qterms or any(t not in stats for t in qterms):
+        p = plan_search(self, query, k=k, mode="AND", offset=offset,
+                        quantize=quantize, weights=weights)
+        if p is None:
             return _empty_result()
-        uniq = list(qterms)
-        w = list(weights) if weights is not None else [1.0] * self.n_fields
-        idfs = {(t, f): w[f] * idf_fn(self.n_docs, st["df"])
-                for t in uniq for f, st in stats[t].items()
-                if f < len(w) and w[f] != 0.0}
-        streams = self._post.streams(uniq)
+        streams = self._post.streams(p.terms)
         allowed = []
         for data in self._positions(streams).values():
-            if all(t in data for t in uniq):
-                m = _near_match_docs(data, uniq, int(slop), self.tombstones)
+            if all(t in data for t in p.terms):
+                m = _near_match_docs(data, p.terms, int(slop),
+                                     self.tombstones)
                 if m.size:
                     allowed.append(m)
         if not allowed:
             return _empty_result()
-        keep = np.unique(np.concatenate(allowed))
-        by_tf = {kk: _term_blocks_from_pdf(
-                    g, idfs[kk], self.field_avgdl.get(kk[1], self.avgdl),
-                    self.codec_name).keep_docs(keep)
-                 for kk, g in streams.items() if kk in idfs}
-        keys = sorted(kk for kk, tb in by_tf.items() if tb.total)
-        terms_here = sorted({t for t, _ in keys})
-        if len(terms_here) < len(uniq):
-            return _empty_result()
-        qmul = float(10 ** quantize) if quantize else None
-        docs, scores = score_and(
-            [[by_tf[kk] for kk in keys if kk[0] == t] for t in terms_here],
-            self.avgdl, k + offset, qmul)
+        # window matches are live docs already: no tombstone pass
+        docs, scores = execute(streams, p, None, p.k,
+                               keep=np.unique(np.concatenate(allowed)))
         return pd.DataFrame({"doc_id": docs[offset:],
                              "score": scores[offset:]})
 
     def _score_phrase_rows(self, m: pd.DataFrame, k: int, offset: int,
                            quantize: int | None = None,
                            weights: list[float] | None = None) -> pd.DataFrame:
+        check_page(k, offset)
         w = list(weights) if weights is not None else None
         if w is not None:
             keep = m["field"].map(
@@ -718,6 +938,7 @@ class LocalSearchIndex:
 
     def search_prefix(self, prefix: str, k: int = 10, max_terms: int = 256,
                       quantize: int | None = None) -> pd.DataFrame:
+        check_page(k)
         terms = self.expand_prefix(prefix, max_terms)
         if not terms:
             return _empty_result()

@@ -21,8 +21,6 @@ fulltext_find with BM25 replacing weighted ranking, plus phrase
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -31,10 +29,10 @@ from pyspark.sql import functions as F
 from .analysis import ANALYZERS, ascii_fold
 from .codec import (_u64_to_i64_ordered, get_codec, segmented_cumsum_u64,
                     varint_decode_concat)
+from .local import (Plan, _fold_terms, check_page, doc_set, execute,
+                    plan_search, restrict, score_streams, stream_docs)
 from .oracle import idf as idf_fn
-from .wand import (B, K1, TermBlocks, score_and, score_bmw_or,
-                   score_dismax, score_exhaustive_or, score_maxscore_or,
-                   score_or_msm, score_or_must)
+from .wand import B, K1
 
 RESULT_SCHEMA = "doc_id long, score double"
 
@@ -58,32 +56,6 @@ class _TombRef:
 
     def get(self):
         return self.arr if self.bc is None else self.bc.value
-
-
-def _fold_terms(query: str | list[str], analyzer: str) -> list[str]:
-    """Query terms -> index-ready terms: every term runs through the SAME
-    analyzer the index was built with (fold + tokenize + stem for stemming
-    analyzers), the reference's prepared-term discipline
-    (``lib/suffix_array_reader.rb:116,128``)."""
-    tok, _ = ANALYZERS[analyzer]
-    parts = [query] if isinstance(query, str) else [t for t in query if t]
-    raw = [t for p in parts for t in tok(p)]
-    return sorted({ascii_fold(t) for t in raw})
-
-
-def _sq(x: float) -> float:
-    return x * x
-
-
-def _term_blocks_from_pdf(g: pd.DataFrame, idf: float, avgdl: float = 0.0,
-                          codec: str = "varint",
-                          sim: tuple | None = None) -> TermBlocks:
-    """One stream's ``TermBlocks`` from its block rows: a pandas frame, or
-    any mapping of block columns to arrays (``serving.Rows``)."""
-    return TermBlocks(
-        idf, g["first_doc"], g["last_doc"], g["n"], g["max_tf"],
-        g["min_dl"], list(g["docs"]), list(g["tfs"]), list(g["dls"]),
-        avgdl=avgdl, codec=codec, sim=sim)
 
 
 class SearchIndex:
@@ -283,29 +255,26 @@ class SearchIndex:
         read) -> broadcast joins of the k-row dl slice and the tiny
         idf/avgdl tables; every float expression mirrors the kernel's
         operation order (``(1-b) + (b*dl)/avgdl``, ``idf * part``)."""
-        qterms = _fold_terms(query, self.analyzer)
-        stats = self.term_stats(qterms)
-        present = sorted({t for t in qterms if t in stats})
+        stats = self.term_stats(_fold_terms(query, self.analyzer))
         empty_schema = ("doc_id long, term string, field int, tf long, "
                         "df long, dl long, idf double, contribution double")
-        if not present:
+        p = plan_search(self, query, k=k, mode=mode, weights=weights,
+                        quantize=quantize, stats=stats)
+        if p is None:
             return self.spark.createDataFrame([], empty_schema)
-        top = self.search(qterms, k=k, mode=mode, weights=weights,
-                          quantize=quantize)
+        top = self._score_buckets(p).orderBy(
+            F.desc("score"), F.asc("doc_id")).limit(k)
         ids = [int(r["doc_id"]) for r in top.select("doc_id").collect()]
         if not ids:
             return self.spark.createDataFrame([], empty_schema)
-        w = list(weights) if weights is not None else [1.0] * self.n_fields
-        idf_rows = [(t, f, int(st["df"]),
-                     float(w[f] * idf_fn(self.n_docs, st["df"])))
-                    for t in present for f, st in stats[t].items()
-                    if f < len(w) and w[f] != 0.0]
+        idf_rows = [(t, f, int(stats[t][f]["df"]), float(v))
+                    for (t, f), v in sorted(p.idfs.items())]
         idf_df = self.spark.createDataFrame(
             idf_rows, "term string, field int, df long, widf double")
         favg_df = self.spark.createDataFrame(
             [(int(f), float(a)) for f, a in sorted(self.field_avgdl.items())],
             "field int, avgdl double")
-        hits = self.find_all(present).filter(F.col("doc_id").isin(ids))
+        hits = self.find_all(p.terms).filter(F.col("doc_id").isin(ids))
         tf = (hits.groupBy("doc_id", "term", "field")
               .agg(F.count("*").alias("tf")))
         dl = (self.docs.filter(F.col("doc_id").isin(ids))
@@ -376,6 +345,12 @@ class SearchIndex:
                tie_breaker: float = 0.0) -> DataFrame:
         """Top-k BM25. Returns DataFrame (doc_id, score[, url]) in total
         order (score DESC, doc_id ASC), sliced [offset, offset+k).
+
+        The options compile once into a plan (``local.plan_search``, the
+        planner ``LocalSearchIndex.search`` runs too), which raises
+        ``ValueError`` on an invalid option, e.g. a ``mode`` other than
+        AND/OR or a negative ``k``/``offset``. ``_score_buckets`` then runs
+        the plan in every bucket with the shared executor.
 
         ``search_after=(score, doc_id)`` is CURSOR pagination (the
         Elasticsearch search_after contract): return the top-k docs
@@ -484,158 +459,21 @@ class SearchIndex:
         a term that is rare in the body but common in the title no
         longer gets an inflated body idf, the failure mode best_fields
         has on cross-field entity names. bm25 similarity only."""
-        if search_after is not None and offset:
-            raise ValueError("search_after and offset are mutually "
-                             "exclusive (cursor pages replace offsets)")
-        if similarity not in ("bm25", "classic", "lmd", "lmjm",
-                              "bm25plus"):
-            raise ValueError(
-                "similarity must be bm25|classic|lmd|lmjm|bm25plus")
-        msm = int(min_should_match) if min_should_match else None
-        if msm is not None and msm <= 1:
-            msm = None
-        if msm is not None:
-            if mode != "OR":
-                raise ValueError("min_should_match requires mode='OR'")
-            if use_wand:
-                raise ValueError("min_should_match is exhaustive-only "
-                                 "(WAND bounds ignore the match floor)")
-        if combine not in ("sum", "dismax", "cross_fields"):
-            raise ValueError("combine must be sum|dismax|cross_fields")
-        dismax_tie = None
-        if combine in ("dismax", "cross_fields"):
-            if mode != "OR" or use_wand or msm is not None:
-                raise ValueError(f"combine={combine!r} requires "
-                                 "mode='OR', no use_wand, no "
-                                 "min_should_match")
-            dismax_tie = float(tie_breaker)
-        if combine == "cross_fields" and (similarity != "bm25"
-                                          or rebase_stats):
-            raise ValueError("combine='cross_fields' requires bm25 "
-                             "without rebase_stats")
-        if similarity != "bm25" and rebase_stats:
-            raise ValueError("rebase_stats currently supports bm25 only")
-        mterms = _fold_terms(must_terms, self.analyzer) if must_terms \
-            else []
-        if mterms:
-            if mode != "OR" or use_wand or msm is not None \
-                    or dismax_tie is not None:
-                raise ValueError("must_terms requires mode='OR' without "
-                                 "use_wand/min_should_match/dismax")
-        qterms = _fold_terms(query, self.analyzer)
-        stats = self.term_stats(qterms)
-        present = [t for t in qterms if t in stats]
-        if not present or (mode == "AND" and len(present) < len(qterms)):
+        p = plan_search(self, query, k=k, mode=mode, offset=offset,
+                        use_wand=use_wand, quantize=quantize,
+                        weights=weights, exclude=exclude,
+                        filter_terms=filter_terms, filter_field=filter_field,
+                        boosts=boosts, search_after=search_after,
+                        similarity=similarity, mu=mu, jm_lambda=jm_lambda,
+                        delta=delta, min_should_match=min_should_match,
+                        must_terms=must_terms, combine=combine,
+                        tie_breaker=tie_breaker,
+                        global_stats=self._rebase_stats if rebase_stats
+                        else None)
+        if p is None:
             return self._empty(with_url)
-        mset = set(mterms)
-        if mset - set(qterms):
-            raise ValueError("must_terms must be among the query terms")
-        if mset - set(present):
-            return self._empty(with_url)   # a required term matches nothing
-        xterms = _fold_terms(exclude, self.analyzer) if exclude else []
-        xstats = self.term_stats(xterms) if xterms else {}
-        xpresent = sorted({t for t in xterms if t in xstats})
-        fterms = _fold_terms(filter_terms, self.analyzer) if filter_terms \
-            else []
-        fstats = self.term_stats(fterms) if fterms else {}
-        fpresent = sorted({t for t in fterms if t in fstats})
-        if fterms and not fpresent:
-            return self._empty(with_url)   # filter matches no dictionary term
-        w = list(weights) if weights is not None else [1.0] * self.n_fields
-        # boost keys run through the SAME analyzer as query terms (fold +
-        # tokenize + stem): on a stemming index boosts={'running': 2.0}
-        # must land on the scored term 'run', not silently no-op
-        bmap = {t: float(bv) for bt, bv in (boosts or {}).items()
-                for t in _fold_terms(bt, self.analyzer)}
-        # (term, field) -> field_weight * idf * boost — the stream's full
-        # scalar (unboosted terms multiply by exactly 1.0: bit-identical)
-        avg_over: float | None = None
-        favg_over: dict | None = None
-        if rebase_stats:
-            if not fpresent:
-                raise ValueError("rebase_stats=True requires filter_terms "
-                                 "that match the dictionary")
-            n_re, avg_over, favg_over, df_re = self._rebase_stats(
-                fpresent, filter_field, present)
-            if n_re == 0:
-                return self._empty(with_url)
-            # streams absent from the subset (df'=0) drop: no allowed doc
-            # contains them, so they could never contribute anyway
-            idfs = {(t, f): w[f] * idf_fn(n_re, df_re[(t, f)])
-                    * bmap.get(t, 1.0)
-                    for t in present for f, st in stats[t].items()
-                    if f < len(w) and w[f] != 0.0
-                    and df_re.get((t, f), 0) > 0}
-            if mode == "AND" and len({t for t, _ in idfs}) < len(qterms):
-                return self._empty(with_url)
-            if not idfs:
-                return self._empty(with_url)
-        elif similarity == "classic":
-            # Lucene ClassicSimilarity: contribution =
-            # (weight * idf_c^2 * boost) * sqrt(tf)/sqrt(dl),
-            # idf_c = 1 + ln(N / (df + 1))
-            # explicit c*c, not **2: the SQL twin multiplies the two
-            # factors, and pow(x, 2.0) is not guaranteed bit-equal to x*x
-            idfs = {(t, f): w[f]
-                    * _sq(1.0 + math.log(self.n_docs / (st["df"] + 1.0)))
-                    * bmap.get(t, 1.0)
-                    for t in present for f, st in stats[t].items()
-                    if f < len(w) and w[f] != 0.0}
-        elif similarity in ("lmd", "lmjm"):
-            # LM smoothing models: idf-free; the model term p(w|C) rides
-            # the per-stream sim spec below
-            idfs = {(t, f): w[f] * bmap.get(t, 1.0)
-                    for t in present for f, st in stats[t].items()
-                    if f < len(w) and w[f] != 0.0}
-        else:
-            idfs = {(t, f): w[f] * idf_fn(self.n_docs, st["df"])
-                    * bmap.get(t, 1.0)
-                    for t in present for f, st in stats[t].items()
-                    if f < len(w) and w[f] != 0.0}
-        if combine == "cross_fields":
-            # BlendedTermQuery: one df per term — the max across the
-            # queried (non-zero-weight) fields — feeds every field
-            # stream's idf; terms present only in zero-weight fields
-            # drop (they could never contribute)
-            bdf = {t: m for t in present
-                   if (m := max((st["df"] for f, st in stats[t].items()
-                                 if f < len(w) and w[f] != 0.0),
-                                default=0)) > 0}
-            idfs = {(t, f): w[f] * idf_fn(self.n_docs, bdf[t])
-                    * bmap.get(t, 1.0)
-                    for t in bdf for f in stats[t]
-                    if f < len(w) and w[f] != 0.0}
-            if not idfs:
-                return self._empty(with_url)
-        sims = None
-        if similarity == "classic":
-            sims = {tf_key: ("classic",) for tf_key in idfs}
-        elif similarity == "bm25plus":
-            # BM25+ (Lv & Zhai 2011): contribution =
-            # (weight * idf * boost) * (bm25_part(tf, dl) + delta)
-            sims = {tf_key: ("bm25plus", float(delta)) for tf_key in idfs}
-        elif similarity == "lmd":
-            sims = {(t, f): ("lmd", float(mu),
-                             stats[t][f]["cf"]
-                             / max(self.field_sumdl.get(f, 0.0), 1.0))
-                    for (t, f) in idfs}
-        elif similarity == "lmjm":
-            sims = {(t, f): ("lmjm", float(jm_lambda),
-                             stats[t][f]["cf"]
-                             / max(self.field_sumdl.get(f, 0.0), 1.0))
-                    for (t, f) in idfs}
-        if msm is not None and len({t for t, _ in idfs}) < msm:
-            return self._empty(with_url)   # floor can never be met
-        scored = self._score_buckets(present, idfs, k + offset, mode, use_wand,
-                                     quantize, exclude_terms=xpresent,
-                                     required_terms=fpresent or None,
-                                     required_field=filter_field,
-                                     avgdl_override=avg_over,
-                                     field_avgdl_override=favg_over,
-                                     after=search_after, sims=sims,
-                                     msm=msm, dismax_tie=dismax_tie,
-                                     must_all=sorted(mset) or None)
-        out = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k + offset)
+        out = self._score_buckets(p).orderBy(
+            F.desc("score"), F.asc("doc_id")).limit(p.k)
         if offset:
             out = out.offset(offset)
         return self._join_url(out) if with_url else out
@@ -654,59 +492,38 @@ class SearchIndex:
         queries sharing a vocabulary cost ~one query's scan plus B cheap
         scoring passes. The global per-query top-k is one window rank over
         n_buckets x k x B rows — no per-query Spark job, no per-query
-        shuffle. Semantics per query are IDENTICAL to ``search(query, k,
-        mode)`` (tested)."""
+        shuffle. Each query is planned by the shared planner against one
+        batched dictionary lookup and scored by the shared kernel choice
+        (``local.score_streams``). Semantics per query are IDENTICAL to
+        ``search(query, k, mode)`` (tested)."""
         from pyspark.sql import Window
-        folded = {qid: _fold_terms(qv, self.analyzer)
-                  for qid, qv in queries.items()}
-        all_terms = sorted({t for v in folded.values() for t in v})
+        check_page(k, 0, mode)
+        all_terms = sorted({t for qv in queries.values()
+                            for t in _fold_terms(qv, self.analyzer)})
         out_schema = "query_id string, doc_id long, score double"
-        if not all_terms:
+        stats = self.term_stats(all_terms) if all_terms else {}
+        plans = sorted((qid, p) for qid, qv in queries.items()
+                       if (p := plan_search(self, qv, k=k, mode=mode,
+                                            quantize=quantize,
+                                            use_wand=use_wand,
+                                            stats=stats)) is not None)
+        if not plans:
             return self.spark.createDataFrame([], out_schema + ", rank int")
-        stats = self.term_stats(all_terms)
-        live: dict[str, list[str]] = {}
-        for qid, terms in folded.items():
-            present = [t for t in terms if t in stats]
-            if present and not (mode == "AND" and len(present) < len(terms)):
-                live[qid] = present
-        if not live:
-            return self.spark.createDataFrame([], out_schema + ", rank int")
-        scan_terms = sorted({t for v in live.values() for t in v})
-        idfs = {(t, f): idf_fn(self.n_docs, st["df"])
-                for t in scan_terms for f, st in stats[t].items()}
-        avgdl, favg = self.avgdl, dict(self.field_avgdl)
-        tombs_ref, codec = self._tombs_ref(), self.codec_name
-        qmul = float(10 ** quantize) if quantize else None
-        qlist = sorted(live.items())
+        # one plan over the union of the batch's streams: each stream is
+        # restricted (and decoded) once per bucket, then every query
+        # scores its own subset
+        scan = plans[0][1]._replace(
+            terms=sorted({t for _, p in plans for t in p.terms}),
+            idfs={kk: v for _, p in plans for kk, v in p.idfs.items()})
+        tombs_ref = self._tombs_ref()
 
         def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
-            drop = tombs_ref.get()
-            by_tf = {(t, int(f)): _term_blocks_from_pdf(
-                        g, idfs[(t, int(f))], favg.get(int(f), avgdl), codec)
-                     for (t, f), g in pdf.groupby(["term", "field"])}
-            if drop is not None:
-                by_tf = {kk: tb.without_docs(drop) for kk, tb in by_tf.items()}
-                by_tf = {kk: tb for kk, tb in by_tf.items() if tb.total}
-            keys = sorted(by_tf)
+            by_tf = restrict(_stream_rows(pdf), scan, tombs_ref.get())
             frames = []
-            for qid, qterms in qlist:
-                sub = [kk for kk in keys if kk[0] in qterms]
-                terms_here = {t for t, _ in sub}
-                if mode == "AND":
-                    if len(terms_here) < len(qterms):
-                        continue
-                    groups = [[by_tf[kk] for kk in sub if kk[0] == t]
-                              for t in sorted(terms_here)]
-                    docs, scores = score_and(groups, avgdl, k, qmul)
-                elif use_wand == "maxscore":
-                    docs, scores = score_maxscore_or(
-                        [by_tf[kk] for kk in sub], avgdl, k, qmul)
-                elif use_wand:
-                    docs, scores = score_bmw_or([by_tf[kk] for kk in sub],
-                                                avgdl, k, qmul)
-                else:
-                    docs, scores = score_exhaustive_or(
-                        [by_tf[kk] for kk in sub], avgdl, k, qmul)
+            for qid, p in plans:
+                docs, scores = score_streams(
+                    {kk: tb for kk, tb in by_tf.items() if kk in p.idfs},
+                    p, p.k)
                 if len(docs):
                     frames.append(pd.DataFrame(
                         {"query_id": qid, "doc_id": docs, "score": scores}))
@@ -716,7 +533,7 @@ class SearchIndex:
                                      "score": pd.array([], dtype="float64")})
             return pd.concat(frames, ignore_index=True)
 
-        blocks = self.postings.filter(F.col("term").isin(scan_terms)).select(
+        blocks = self.postings.filter(F.col("term").isin(scan.terms)).select(
             "bucket", "term", "field", "n", "first_doc", "last_doc",
             "max_tf", "min_dl", "docs", "tfs", "dls")
         scored = blocks.groupBy("bucket").applyInPandas(scorer, out_schema)
@@ -746,35 +563,27 @@ class SearchIndex:
         Tombstone semantics match the unfiltered stats: pending deletes
         stay IN the stats until vacuum (documented staleness), exactly as
         ``n_docs``/``df``/``avgdl`` behave on the default path."""
+        if not fterms:
+            raise ValueError("rebase_stats=True requires filter_terms "
+                             "that match the dictionary")
         codec = self.codec_name
         fset = frozenset(fterms)
         qset = frozenset(qterms)
-        ffld = ffield
         out_schema = "term string, field int, df long"
 
         def statser(pdf: pd.DataFrame) -> pd.DataFrame:
-            fmask = pdf["term"].isin(fset)
-            if ffld is not None:
-                fmask &= pdf["field"] == ffld
-            fparts = [_term_blocks_from_pdf(g, 0.0, 0.0, codec)
-                      .decode_all()[0]
-                      for _, g in pdf[fmask].groupby(["term", "field"])]
-            terms_o: list = []
-            fields_o: list = []
-            dfs_o: list = []
-            if fparts:
-                allowed = np.unique(np.concatenate(fparts))
-                for (t, f), g in pdf[pdf["term"].isin(qset)].groupby(
-                        ["term", "field"]):
-                    docs = _term_blocks_from_pdf(g, 0.0, 0.0,
-                                                 codec).decode_all()[0]
-                    terms_o.append(t)
-                    fields_o.append(int(f))
-                    dfs_o.append(int(np.isin(docs, allowed).sum()))
+            rows = _stream_rows(pdf)
+            allowed = doc_set(rows, fset, codec, ffield)
+            qrows = [] if allowed is None else \
+                [(kk, g) for kk, g in rows.items() if kk[0] in qset]
             return pd.DataFrame({
-                "term": pd.Series(terms_o, dtype="object"),
-                "field": pd.Series(fields_o, dtype="int32"),
-                "df": pd.Series(dfs_o, dtype="int64")})
+                "term": pd.Series([t for (t, _), _ in qrows],
+                                  dtype="object"),
+                "field": pd.Series([f for (_, f), _ in qrows],
+                                   dtype="int32"),
+                "df": pd.Series([int(np.isin(stream_docs(g, codec),
+                                             allowed).sum())
+                                 for _, g in qrows], dtype="int64")})
 
         scan_terms = sorted(qset | fset)
         blocks = self.postings.filter(
@@ -788,7 +597,7 @@ class SearchIndex:
         df_re = {(r["term"], int(r["field"])): int(r["df"])
                  for r in df_rows}
 
-        allowed_df = self._matching_docs_raw(fterms, ffld)
+        allowed_df = self._matching_docs_raw(fterms, ffield)
         aggs = [F.count("*").alias("n")]
         aggs += [F.sum(F.col("dls")[i]).alias(f"s{i}")
                  for i in range(self.n_fields)]
@@ -825,128 +634,24 @@ class SearchIndex:
         return blocks.groupBy("bucket").applyInPandas(
             match_bucket, "doc_id long")
 
-    def _score_buckets(self, terms: list[str], idfs: dict[tuple, float],
-                       k_local: int, mode: str, use_wand: bool,
-                       quantize: int | None = None,
-                       exclude_terms: list[str] | None = None,
-                       required_terms: list[str] | None = None,
-                       required_field: int | None = None,
-                       avgdl_override: float | None = None,
-                       field_avgdl_override: dict | None = None,
-                       after: tuple[float, int] | None = None,
-                       sims: dict | None = None,
-                       msm: int | None = None,
-                       dismax_tie: float | None = None,
-                       must_all: list[str] | None = None
-                       ) -> DataFrame:
-        # rebased-stats searches override the corpus length norms
-        # (everything else about the scan/scoring is identical)
-        avgdl = self.avgdl if avgdl_override is None else avgdl_override
-        favg = dict(self.field_avgdl if field_avgdl_override is None
-                    else field_avgdl_override)
-        n_query = len(terms)
-        qmul = float(10 ** quantize) if quantize else None
-
+    def _score_buckets(self, plan: Plan) -> DataFrame:
+        """(doc_id, score): each bucket's top ``plan.k`` for ``plan``
+        (``local.plan_search``), from one pruned postings scan of the
+        plan's query, exclude and filter streams. Each bucket's scorer
+        groups its block rows by (term, field) and runs the shared
+        executor (``local.execute``) with the reader's tombstones; buckets
+        are doc-disjoint, so exclude and filter sets are bucket-local."""
         tombs_ref = self._tombs_ref()
-        codec = self.codec_name
-        xset = frozenset(exclude_terms or [])
-        fset = frozenset(required_terms or [])
-        mall = frozenset(must_all or [])
-        ffield = required_field
-        cursor = (float(after[0]), int(after[1])) if after is not None \
-            else None
 
         def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
-            drop = tombs_ref.get()
-            empty = pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                                  "score": pd.array([], dtype="float64")})
-            allowed = None
-            if fset:
-                fmask = pdf["term"].isin(fset)
-                if ffield is not None:
-                    fmask &= pdf["field"] == ffield
-                # filter streams are NOT removed from pdf: a term may both
-                # filter and score (it scores only if it is in idfs)
-                fparts = [_term_blocks_from_pdf(g, 0.0, avgdl, codec)
-                          .decode_all()[0]
-                          for _, g in pdf[fmask].groupby(["term", "field"])]
-                if not fparts:
-                    return empty
-                allowed = np.unique(np.concatenate(fparts))
-            bucket_drop = drop
-            if xset:
-                xmask = pdf["term"].isin(xset)
-                xpdf, pdf = pdf[xmask], pdf[~xmask]
-                xparts = [_term_blocks_from_pdf(g, 0.0, avgdl, codec)
-                          .decode_all()[0]
-                          for _, g in xpdf.groupby(["term", "field"])]
-                if xparts:
-                    excl = np.unique(np.concatenate(xparts))
-                    bucket_drop = (excl if bucket_drop is None
-                                   else np.union1d(bucket_drop, excl))
-            # one TermBlocks per (term, field) stream, ascending order
-            by_tf = {(t, int(f)): _term_blocks_from_pdf(
-                        g, idfs[(t, int(f))], favg.get(int(f), avgdl), codec,
-                        sim=None if sims is None else sims[(t, int(f))])
-                     for (t, f), g in pdf.groupby(["term", "field"])
-                     if (t, int(f)) in idfs}
-            if bucket_drop is not None:
-                by_tf = {k: tb.without_docs(bucket_drop)
-                         for k, tb in by_tf.items()}
-                by_tf = {k: tb for k, tb in by_tf.items() if tb.total}
-            if allowed is not None:
-                by_tf = {k: tb.keep_docs(allowed)
-                         for k, tb in by_tf.items()}
-                by_tf = {k: tb for k, tb in by_tf.items() if tb.total}
-            terms_here = {t for t, _ in by_tf}
-            if mode == "AND" and len(terms_here) < n_query:
-                return pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                                     "score": pd.array([], dtype="float64")})
-            keys = sorted(by_tf)                     # (term, field) ascending
-            if mode == "AND":
-                groups = [[by_tf[k] for k in keys if k[0] == t]
-                          for t in sorted(terms_here)]
-                docs, scores = score_and(groups, avgdl, k_local, qmul,
-                                         after=cursor)
-            elif mall:
-                if mall - terms_here:   # a must term absent from this
-                    return empty        # doc-complete bucket: no doc here
-                ordered = sorted(terms_here)
-                groups = [[by_tf[k] for k in keys if k[0] == t]
-                          for t in ordered]
-                docs, scores = score_or_must(
-                    groups, [t in mall for t in ordered], avgdl, k_local,
-                    qmul, after=cursor)
-            elif msm is not None:
-                groups = [[by_tf[k] for k in keys if k[0] == t]
-                          for t in sorted(terms_here)]
-                docs, scores = score_or_msm(groups, avgdl, k_local, msm,
-                                            qmul, after=cursor)
-            elif dismax_tie is not None:
-                groups = [[by_tf[k] for k in keys if k[0] == t]
-                          for t in sorted(terms_here)]
-                docs, scores = score_dismax(groups, avgdl, k_local,
-                                            dismax_tie, qmul, after=cursor)
-            elif use_wand == "maxscore":
-                docs, scores = score_maxscore_or([by_tf[k] for k in keys],
-                                                 avgdl, k_local, qmul,
-                                                 after=cursor)
-            elif use_wand:
-                docs, scores = score_bmw_or([by_tf[k] for k in keys], avgdl,
-                                            k_local, qmul, after=cursor)
-            else:
-                docs, scores = score_exhaustive_or([by_tf[k] for k in keys],
-                                                   avgdl, k_local, qmul,
-                                                   after=cursor)
+            docs, scores = execute(_stream_rows(pdf), plan, tombs_ref.get(),
+                                   plan.k)
             return pd.DataFrame({"doc_id": docs, "score": scores})
 
         # column-prune before the Arrow hop: the scorer never reads positions
         # (poss is the largest column in the index)
-        scan_terms = terms + [t for t in (exclude_terms or [])
-                              if t not in terms]
-        scan_terms += [t for t in (required_terms or [])
-                       if t not in scan_terms]
-        blocks = self.postings.filter(F.col("term").isin(scan_terms)).select(
+        blocks = self.postings.filter(
+            F.col("term").isin(plan.scan_terms())).select(
             "bucket", "term", "field", "n", "first_doc", "last_doc", "max_tf",
             "min_dl", "docs", "tfs", "dls")
         return blocks.groupBy("bucket").applyInPandas(scorer, RESULT_SCHEMA)
@@ -1344,60 +1049,39 @@ class SearchIndex:
             if len(set(oterms)) != len(oterms):
                 raise ValueError("ordered near does not support repeated "
                                  "query terms")
-        qterms = _fold_terms(query, self.analyzer)
-        stats = self.term_stats(qterms)
-        if any(t not in stats for t in qterms) or not qterms:
+        p = plan_search(self, query, k=k, mode="AND", offset=offset,
+                        quantize=quantize, weights=weights)
+        if p is None:
             return self._empty()
-        uniq = list(qterms)                        # already sorted distinct
-        w = list(weights) if weights is not None else [1.0] * self.n_fields
-        idfs = {(t, f): w[f] * idf_fn(self.n_docs, st["df"])
-                for t in uniq for f, st in stats[t].items()
-                if f < len(w) and w[f] != 0.0}
-        avgdl, favg = self.avgdl, dict(self.field_avgdl)
-        tombs_ref, codec = self._tombs_ref(), self.codec_name
-        qmul = float(10 ** quantize) if quantize else None
-        k_local, n_query, sl = k + offset, len(uniq), int(slop)
+        tombs_ref, codec, sl = self._tombs_ref(), self.codec_name, int(slop)
 
         def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
             tombs = tombs_ref.get()
-            empty = pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                                  "score": pd.array([], dtype="float64")})
             allowed = []
             for _fid, fpdf in pdf.groupby("field"):
                 data = {t: _decode_with_positions(g, codec)
                         for t, g in fpdf.groupby("term")}
-                if any(t not in data for t in uniq):
+                if any(t not in data for t in p.terms):
                     continue
                 if oterms is not None:
                     m = _ordered_near_match_docs(data, oterms, sl, tombs)
                 else:
-                    m = _near_match_docs(data, uniq, sl, tombs)
+                    m = _near_match_docs(data, p.terms, sl, tombs)
                 if m.size:
                     allowed.append(m)
             if not allowed:
-                return empty
-            keep = np.unique(np.concatenate(allowed))
-            by_tf = {(t, int(f)): _term_blocks_from_pdf(
-                        g, idfs[(t, int(f))], favg.get(int(f), avgdl), codec)
-                     for (t, f), g in pdf.groupby(["term", "field"])
-                     if (t, int(f)) in idfs}
-            by_tf = {kk: tb.keep_docs(keep) for kk, tb in by_tf.items()}
-            by_tf = {kk: tb for kk, tb in by_tf.items() if tb.total}
-            terms_here = {t for t, _ in by_tf}
-            if len(terms_here) < n_query:
-                return empty
-            keys = sorted(by_tf)
-            groups = [[by_tf[kk] for kk in keys if kk[0] == t]
-                      for t in sorted(terms_here)]
-            docs, scores = score_and(groups, avgdl, k_local, qmul)
+                return pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
+                                     "score": pd.array([], dtype="float64")})
+            # window matches are live docs already: no tombstone pass
+            docs, scores = execute(_stream_rows(pdf), p, None, p.k,
+                                   keep=np.unique(np.concatenate(allowed)))
             return pd.DataFrame({"doc_id": docs, "score": scores})
 
-        blocks = self.postings.filter(F.col("term").isin(uniq)).select(
+        blocks = self.postings.filter(F.col("term").isin(p.terms)).select(
             "bucket", "term", "field", "n", "first_doc", "last_doc",
             "max_tf", "min_dl", "docs", "tfs", "dls", "poss")
         scored = blocks.groupBy("bucket").applyInPandas(scorer, RESULT_SCHEMA)
-        out = (scored.orderBy(F.desc("score"), F.asc("doc_id"))
-               .limit(k + offset))
+        out = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(p.k)
         if offset:
             out = out.offset(offset)
         return self._join_url(out) if with_url else out
@@ -1426,37 +1110,32 @@ class SearchIndex:
                              "boost disabled")
         if c < 0:
             raise ValueError("c must be >= 0")
-        qterms = _fold_terms(query, self.analyzer)
-        stats = self.term_stats(qterms)
-        if any(t not in stats for t in qterms) or not qterms:
+        # unquantized plan: the boost is applied, then quantized, after
+        # the conjunctive kernel
+        p = plan_search(self, query, k=k, mode="AND")
+        if p is None:
             return self._empty()
-        uniq = list(qterms)
-        idfs = {(t, f): idf_fn(self.n_docs, st["df"])
-                for t in uniq for f, st in stats[t].items()}
-        avgdl, favg = self.avgdl, dict(self.field_avgdl)
         tombs_ref, codec = self._tombs_ref(), self.codec_name
         qmul = float(10 ** quantize) if quantize else None
-        k_local, n_query, cc = k, len(uniq), float(c)
-        nm1 = float(len(uniq) - 1)
+        cc, nm1 = float(c), float(len(p.terms) - 1)
 
         def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
             from .wand import topk_select
             tombs = tombs_ref.get()
-            empty = pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                                  "score": pd.array([], dtype="float64")})
             span_ids: list[np.ndarray] = []
             span_vals: list[np.ndarray] = []
             for _fid, fpdf in pdf.groupby("field"):
                 data = {t: _decode_with_positions(g, codec)
                         for t, g in fpdf.groupby("term")}
-                if any(t not in data for t in uniq):
+                if any(t not in data for t in p.terms):
                     continue
-                ids, spans = _min_spans(data, uniq, tombs)
+                ids, spans = _min_spans(data, p.terms, tombs)
                 if ids.size:
                     span_ids.append(ids)
                     span_vals.append(spans)
             if not span_ids:
-                return empty
+                return pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
+                                     "score": pd.array([], dtype="float64")})
             all_ids = np.concatenate(span_ids)
             all_spans = np.concatenate(span_vals)
             order = np.lexsort((all_spans, all_ids))
@@ -1464,30 +1143,18 @@ class SearchIndex:
                 ([True], all_ids[order][1:] != all_ids[order][:-1]))
             ids = all_ids[order][keep]          # sorted unique doc ids
             spans = all_spans[order][keep]      # min across fields
-            by_tf = {(t, int(f)): _term_blocks_from_pdf(
-                        g, idfs[(t, int(f))], favg.get(int(f), avgdl),
-                        codec)
-                     for (t, f), g in pdf.groupby(["term", "field"])
-                     if (t, int(f)) in idfs}
-            by_tf = {kk: tb.keep_docs(ids) for kk, tb in by_tf.items()}
-            by_tf = {kk: tb for kk, tb in by_tf.items() if tb.total}
-            terms_here = {t for t, _ in by_tf}
-            if len(terms_here) < n_query:
-                return empty
-            keys = sorted(by_tf)
-            groups = [[by_tf[kk] for kk in keys if kk[0] == t]
-                      for t in sorted(terms_here)]
-            docs, scores = score_and(groups, avgdl, int(ids.size), None)
+            docs, scores = execute(_stream_rows(pdf), p, None,
+                                   int(ids.size), keep=ids)
             at = np.searchsorted(ids, docs)
             boost = 1.0 + cc / (1.0 + (spans[at].astype(np.float64)
                                        - nm1))
             boosted = scores * boost
             if qmul:
                 boosted = np.floor(boosted * qmul) / qmul
-            docs, boosted = topk_select(docs, boosted, k_local)
+            docs, boosted = topk_select(docs, boosted, p.k)
             return pd.DataFrame({"doc_id": docs, "score": boosted})
 
-        blocks = self.postings.filter(F.col("term").isin(uniq)).select(
+        blocks = self.postings.filter(F.col("term").isin(p.terms)).select(
             "bucket", "term", "field", "n", "first_doc", "last_doc",
             "max_tf", "min_dl", "docs", "tfs", "dls", "poss")
         scored = blocks.groupBy("bucket").applyInPandas(scorer,
@@ -1530,6 +1197,7 @@ class SearchIndex:
                               with_url: bool,
                               quantize: int | None = None,
                               weights: list[float] | None = None) -> DataFrame:
+        check_page(k, offset)
         w = list(weights) if weights is not None else None
         matches = matches.cache()
         try:
@@ -1596,6 +1264,7 @@ class SearchIndex:
                       with_url: bool = False,
                       quantize: int | None = None) -> DataFrame:
         """Prefix query ``fa%`` → dictionary range-expansion → OR-BM25."""
+        check_page(k)
         terms = self.expand_prefix(prefix, max_terms)
         if not terms:
             return self._empty()
@@ -1691,6 +1360,12 @@ def snippets(result: DataFrame, corpus: DataFrame, query: str | list[str],
         F.substring(F.col(text_col), start.cast("int"), 2 * size))
     joined = corpus.join(F.broadcast(result), id_col)
     return joined.select(id_col, "score", snippet.alias("snippet"))
+
+
+def _stream_rows(pdf: pd.DataFrame) -> dict:
+    """(term, field) -> block rows of each stream in one bucket's frame:
+    the executor's input (``local.execute``)."""
+    return {(t, int(f)): g for (t, f), g in pdf.groupby(["term", "field"])}
 
 
 def _hit_frames(pdf: pd.DataFrame, codec: str, tombs) -> list[pd.DataFrame]:

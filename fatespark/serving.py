@@ -201,7 +201,7 @@ class Streams:
 
 class Rows:
     """Block rows [a, b) of one (term, field) stream, as the column mapping
-    ``query._term_blocks_from_pdf`` and ``query._decode_with_positions``
+    ``local._term_blocks_from_pdf`` and ``query._decode_with_positions``
     read: integer columns as array views, binary columns as lists of bytes;
     ``len`` is the block count."""
 

@@ -238,6 +238,25 @@ CHUNKED_CASES = {
     "span_within": lambda ix: ix.search_span_within("array", "big array",
                                                     k=10),
     "phrase": lambda ix: ix.search_phrase("big array", k=10),
+    # every scalar the planner computes, one case each
+    "boosts": lambda ix: ix.search(["the", "smith", "big"], k=10, mode="OR",
+                                   boosts={"smith": 2.5, "big": 0.5}),
+    "weights_text_only": lambda ix: ix.search(["the", "big", "de"], k=10,
+                                              mode="OR",
+                                              weights=[1.0, 0.0]),
+    "weights_mixed": lambda ix: ix.search(["the", "big", "de"], k=10,
+                                          mode="OR", weights=[0.5, 2.0]),
+    "classic": lambda ix: ix.search(["the", "big"], k=10, mode="OR",
+                                    similarity="classic"),
+    "bm25plus": lambda ix: ix.search(["the", "big"], k=10, mode="OR",
+                                     similarity="bm25plus"),
+    "lmjm": lambda ix: ix.search(["the", "big"], k=10, mode="OR",
+                                 similarity="lmjm"),
+    "quantize": lambda ix: ix.search(["the", "smith", "big"], k=10,
+                                     mode="OR", quantize=1),
+    "wand_exclude_filter": lambda ix: ix.search(
+        ["the", "smith", "big"], k=10, mode="OR", use_wand=True,
+        exclude="array", filter_terms=["ru", "de"], filter_field=1),
 }
 
 
@@ -261,6 +280,35 @@ def test_chunked_tombstoned_search_after(chunked_idx):
                              use_wand=True, search_after=cursor))
         assert a and a == b
         cursor = (a[-1][1], a[-1][0])
+
+
+BAD_INPUT = {
+    "k": lambda ix: ix.search(["the", "big"], k=-1, mode="OR"),
+    "offset": lambda ix: ix.search(["the", "big"], k=5, mode="OR",
+                                   offset=-2),
+    "mode": lambda ix: ix.search(["the", "big"], k=5, mode="XOR"),
+    "prefix": lambda ix: ix.search_prefix("bi", k=-1),
+    "near": lambda ix: ix.search_near(["big", "array"], 3, k=-1),
+    "phrase": lambda ix: ix.search_phrase("big array", k=-1),
+    "span": lambda ix: ix.search_span_within("array", "big array", k=5,
+                                             offset=-1),
+    "many": lambda ix: ix.search_many({"q": ["the", "big"]}, k=5,
+                                      mode="XOR"),
+}
+
+
+@pytest.mark.parametrize("reader,case", [
+    (r, c) for r in ("SearchIndex", "LocalSearchIndex") for c in BAD_INPUT
+    if not (r == "LocalSearchIndex" and c == "many")])
+def test_invalid_search_input_raises(chunked_idx, reader, case):
+    """A negative k or offset, or a mode other than AND/OR, raises
+    ValueError on either reader instead of running."""
+    dist, loc, _ = chunked_idx
+    ix = dist if reader == "SearchIndex" else loc
+    with pytest.raises(ValueError):
+        out = BAD_INPUT[case](ix)
+        if hasattr(out, "collect"):
+            out.collect()
 
 
 # -- serving copy (IndexBuilder.compact_local) --------------------------------
