@@ -195,11 +195,11 @@ def plan_search(ix, query: str | list[str], k: int = 10, mode: str = "AND",
     present = [t for t in qterms if t in stats]
     if not present or (mode == "AND" and len(present) < len(qterms)):
         return None
-    mset = set(mterms)
-    if mset - set(qterms):
-        raise ValueError("must_terms must be among the query terms")
-    if mset - set(present):
-        return None                 # a required term matches nothing
+    if mterms:
+        if set(mterms) - set(qterms):
+            raise ValueError("must_terms must be among the query terms")
+        if set(mterms) - set(present):
+            return None             # a required term matches nothing
     fpresent = sorted({t for t in fterms if t in stats})
     if fterms and not fpresent:
         return None                 # the filter matches no dictionary term
@@ -276,7 +276,7 @@ def plan_search(ix, query: str | list[str], k: int = 10, mode: str = "AND",
         qmul=float(10 ** quantize) if quantize else None,
         after=None if search_after is None
         else (float(search_after[0]), int(search_after[1])),
-        msm=msm, dismax_tie=dismax_tie, must=frozenset(mset))
+        msm=msm, dismax_tie=dismax_tie, must=frozenset(mterms))
 
 
 def stream_docs(rows, codec: str) -> np.ndarray:
@@ -311,7 +311,7 @@ def restrict(rows, plan: Plan, tombstones,
         if keep is not None:
             allowed = np.intersect1d(allowed, keep, assume_unique=True)
     drop = tombstones
-    excl = doc_set(rows, plan.exclude, plan.codec)
+    excl = doc_set(rows, plan.exclude, plan.codec) if plan.exclude else None
     if excl is not None:
         drop = excl if drop is None else np.union1d(drop, excl)
     by_tf = {}
