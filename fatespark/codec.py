@@ -30,6 +30,20 @@ def _u64_to_i64_ordered(x: np.ndarray) -> np.ndarray:
     return (x ^ _SIGN).view(np.int64)
 
 
+def not_in_sorted(values: np.ndarray,
+                  sorted_ids: np.ndarray | None) -> np.ndarray:
+    """Mask of the ``values`` absent from the sorted array ``sorted_ids``
+    (all True when it is None or empty): the tombstone and doc-set test
+    both readers, the merges and the kernels share."""
+    keep = np.ones(values.size, dtype=bool)
+    if sorted_ids is None or not sorted_ids.size or not values.size:
+        return keep
+    j = np.searchsorted(sorted_ids, values)
+    hit = j < sorted_ids.size
+    hit[hit] = sorted_ids[j[hit]] == values[hit]
+    return ~hit
+
+
 def varint_encode(values: np.ndarray) -> bytes:
     """Vectorized LEB128 encode of a uint64 array."""
     v = np.ascontiguousarray(values, dtype=np.uint64)

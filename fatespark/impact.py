@@ -47,8 +47,9 @@ from pyspark.sql import functions as F
 
 from .codec import get_codec, segmented_cumsum_u64, segmented_delta
 from .oracle import idf as idf_fn
-from .pruning import _part_vec, _row_starts, _tomb_keep
-from .codec import _i64_to_u64_ordered, _u64_to_i64_ordered
+from .pruning import _part_vec, _row_starts
+from .codec import (_i64_to_u64_ordered, _u64_to_i64_ordered,
+                    not_in_sorted)
 
 IMPACT_SCHEMA = ("bucket int, term string, field int, q int, n int, "
                  "docs binary")
@@ -83,7 +84,7 @@ def _score_batches(codec_name: str, field_avgdl: dict, avgdl: float,
         s = np.repeat(idf_row, ns) * part
         keep = None
         if tombs_u64 is not None:
-            keep = _tomb_keep(du, tombs_u64)
+            keep = not_in_sorted(du, tombs_u64)
         return ns, starts, s, du, keep
 
     return decode

@@ -16,6 +16,21 @@ kernel choice) call it once per bucket. Spark-only statistics (the
 filtered-subset rebase, federated global df/avgdl) enter the planner as
 ``global_stats``.
 
+Positional queries (phrase, phrase prefix, phrases-any, span
+first/not/within/containing, ``count_phrase``) have their own planner and
+matcher. ``plan_spans`` validates the page, the positions gate and the
+span options, drops the variants (token sequences, from
+``_phrase_variants``/``_spanor_variants``) that the dictionary cannot
+match and returns a ``SpanPlan`` with the scan terms; ``plan_phrase_count``
+answers ``count_phrase`` from the dictionary where it can. ``positions``
+decodes a (term, field) -> block rows mapping into field -> term ->
+postings with positions, and ``match_spans`` turns that into (doc_id,
+field, tf, dl) match rows; ``near_docs`` is the proximity window test
+over the same decode. Each reader's ``_span_matches`` runs the matcher:
+once over every bucket's rows locally, once per bucket in Spark's
+``applyInPandas``. The readers differ only in the pseudo-term scorer that
+ranks the matches: numpy locally, a JVM expression on Spark.
+
 This is the Spark-era analogue of the reference's in-memory readers
 (``lib/suffix_array_reader.rb:97-113`` loads header + inline suffixes once,
 then answers in µs): open once, then ``count``/``search``/``search_prefix``
@@ -370,6 +385,195 @@ def execute(rows, plan: Plan, tombstones, k: int,
     return score_streams(by_tf, plan, k)
 
 
+# -- positional queries: span planner and matcher, shared by both readers ---
+
+class SpanPlan(NamedTuple):
+    """One compiled positional query (phrase, phrase prefix, phrases-any,
+    span first/not/within/containing, ``count_phrase``): the token
+    sequences to match and their span constraints. ``plan_spans`` builds
+    it, positionally (serving loops plan a phrase op per call);
+    ``match_spans`` runs it over all buckets (``LocalSearchIndex``) or one
+    (``SearchIndex``'s per-bucket matcher)."""
+    terms: list[str]          # every term whose position streams are read
+    variants: list            # phrase clauses; an enclosure's kept side
+    others: list | None       # an enclosure's other side; None: phrase
+    mode: str | None          # "within" | "containing"; None: phrase
+    max_end: int | None       # SpanFirst bound on the exclusive span end
+    exclude: list[str]        # SpanNot terms found in the dictionary
+    pre: int
+    post: int
+
+
+def require_positions(ix, what: str) -> None:
+    """Reject a positional query on an index built without positions."""
+    if not ix.meta.get("store_positions", True):
+        raise ValueError(f"index built without positions; {what} disabled")
+
+
+def plan_spans(ix, variants: list[list[str]],
+               others: list[list[str]] | None = None,
+               mode: str | None = None, k: int = 0, offset: int = 0,
+               max_end: int | None = None,
+               exclude: str | list[str] | None = None,
+               pre: int = 0, post: int = 0) -> SpanPlan | None:
+    """Validate a positional query and compile it against reader ``ix``
+    (either reader: its ``meta``, ``analyzer`` and ``term_stats``).
+    Docs match when ANY of ``variants`` (token sequences, see
+    ``_phrase_variants``) occurs; with ``mode`` "within"/"containing" the
+    variants are the kept side of a span enclosure against ``others``.
+    ``max_end``, ``exclude`` (raw SpanNot terms, folded here) and
+    ``pre``/``post`` are the span constraints of
+    ``query._match_variant_rows``. Returns None when no document can
+    match: no variant has all its terms in the dictionary, or an
+    enclosure has no such variant on one side."""
+    require_positions(ix, "phrase and span queries")
+    check_page(k, offset)
+    if max_end is not None and max_end <= 0:
+        raise ValueError("max_end must be positive")
+    if pre < 0 or post < 0:
+        raise ValueError("pre/post must be >= 0")
+    ex = []
+    if exclude is not None:
+        ex = _fold_terms(exclude, ix.analyzer)
+        if not ex:
+            raise ValueError("empty exclude terms")
+    variants = [v for v in variants if v]
+    others = None if others is None else [v for v in others if v]
+    if not variants or others == []:
+        return None
+    stats = ix.term_stats(sorted({t for v in variants + (others or [])
+                                  for t in v} | set(ex)))
+    variants = [v for v in variants if all(t in stats for t in v)]
+    others = None if others is None else \
+        [v for v in others if all(t in stats for t in v)]
+    if not variants or others == []:
+        return None
+    ex = [t for t in ex if t in stats]
+    terms = sorted({t for v in variants + (others or []) for t in v}
+                   | set(ex))
+    return SpanPlan(terms, variants, others, mode,
+                    None if max_end is None else int(max_end), ex,
+                    int(pre), int(post))
+
+
+def _phrase_variants(ix, phrase: str,
+                     max_expansions: int | None = None) -> list[list[str]]:
+    """Token sequences to match: just the analyzed phrase
+    (``max_expansions=None``), or — prefix mode — one variant per dictionary
+    expansion of the LAST token (the reference's natural suffix semantics: a
+    query is a byte prefix of the suffix from a token start, so earlier
+    tokens are exact and the final token matches as a prefix —
+    ``README.markdown:7-11``). ``max_expansions=0`` expands UNCAPPED (exact
+    counts under pending tombstones). ``ix.expand_prefix`` is the reader's
+    dictionary range scan."""
+    tok, _ = ANALYZERS[ix.analyzer]
+    terms = [ascii_fold(t) for t in tok(ascii_fold(phrase))]
+    if not terms:
+        return []
+    if max_expansions is None:
+        return [terms]
+    cap = None if max_expansions == 0 else max_expansions
+    return [terms[:-1] + [e] for e in ix.expand_prefix(terms[-1], cap)]
+
+
+def _spanor_variants(ix, q: str | list[str]) -> list[list[str]]:
+    """The variants of a SpanOr: one phrase, or any of a list of them."""
+    parts = [q] if isinstance(q, str) else [p for p in q if p]
+    return [v for p in parts for v in _phrase_variants(ix, p)]
+
+
+def plan_phrase_count(ix, phrase: str, prefix: bool,
+                      max_expansions: int) -> int | SpanPlan:
+    """``count_phrase`` (see ``SearchIndex.count_phrase``) from the
+    dictionary where it answers exactly — single-token variants on an
+    index with no pending deletes sum cf, a prefix through
+    ``ix.count_prefix`` (uncapped) — else the plan whose matches' tf sum
+    is the count; 0 when nothing can match. With pending deletes a
+    single-token prefix expands uncapped, so the matcher's count stays
+    exact."""
+    live = ix.tombstones is not None
+    tok, _ = ANALYZERS[ix.analyzer]
+    cap = max_expansions if prefix else None
+    if prefix and live and len(tok(ascii_fold(phrase))) == 1:
+        cap = 0
+    variants = _phrase_variants(ix, phrase, cap)
+    if variants and all(len(v) == 1 for v in variants) and not live:
+        if prefix:
+            return ix.count_prefix(
+                [ascii_fold(t) for t in tok(ascii_fold(phrase))][-1])
+        st = ix.term_stats([v[0] for v in variants])
+        return sum(f["cf"] for d in st.values() for f in d.values())
+    plan = plan_spans(ix, variants)
+    return 0 if plan is None else plan
+
+
+def positions(rows, codec: str) -> dict[int, dict[str, dict]]:
+    """field -> term -> decoded postings with positions
+    (``query._decode_with_positions``) of every stream in ``rows``, a
+    mapping (term, field) -> block rows: ``serving.Rows`` of every bucket
+    locally, one bucket's ``query._stream_rows`` on Spark. Each stream
+    decodes once."""
+    from . import query
+    out: dict[int, dict[str, dict]] = {}
+    for (t, f), g in rows.items():
+        out.setdefault(f, {})[t] = query._decode_with_positions(g, codec)
+    return out
+
+
+def match_spans(by_field: dict, plan: SpanPlan, tombs) -> pd.DataFrame:
+    """(doc_id int64, field int32, tf int32, dl int32) of every doc and
+    field where ``plan``'s spans survive, tf = surviving spans summed
+    over variants — ``query._variants_match_rows`` (phrases, span
+    first/not) or ``query._variants_enclosure_rows`` (within/containing)
+    per field of ``by_field`` (``positions``)."""
+    from . import query
+    frames = []
+    # per field: unlike the reference's heap-wide byte match (an artifact
+    # of its single fulltext stream), a phrase never spans two fields
+    for f in sorted(by_field):
+        if plan.mode is None:
+            m = query._variants_match_rows(
+                by_field[f], plan.variants, tombs, max_end=plan.max_end,
+                exclude=plan.exclude, pre=plan.pre, post=plan.post)
+        else:
+            m = query._variants_enclosure_rows(
+                by_field[f], plan.variants, plan.others, tombs, plan.mode)
+        if m is not None:
+            frames.append(pd.DataFrame({
+                "doc_id": m["doc_id"].astype("int64"),
+                "field": np.full(len(m), f, dtype=np.int32),
+                "tf": m["tf"].astype("int32"),
+                "dl": m["dl"].astype("int32")}))
+    if not frames:
+        return pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
+                             "field": pd.array([], dtype="int32"),
+                             "tf": pd.array([], dtype="int32"),
+                             "dl": pd.array([], dtype="int32")})
+    return pd.concat(frames, ignore_index=True)
+
+
+def near_docs(by_field: dict, terms: list[str], slop: int, tombs,
+              ordered_terms: list[str] | None = None) -> np.ndarray | None:
+    """Sorted ids of the live docs where all ``terms`` co-occur within a
+    window of ``slop`` in some field of ``by_field`` (``positions``):
+    ``query._near_match_docs``, or ``query._ordered_near_match_docs``
+    over ``ordered_terms``, the same terms in query order. None when no
+    doc qualifies."""
+    from . import query
+    allowed = []
+    for data in by_field.values():
+        if any(t not in data for t in terms):
+            continue
+        if ordered_terms is None:
+            m = query._near_match_docs(data, terms, slop, tombs)
+        else:
+            m = query._ordered_near_match_docs(data, ordered_terms, slop,
+                                               tombs)
+        if m.size:
+            allowed.append(m)
+    return np.unique(np.concatenate(allowed)) if allowed else None
+
+
 class _RGIndex:
     """Row-group skip index over a parquet directory, keyed by a string
     column's min/max statistics (the persisted fuzzy-variant table). Footers
@@ -559,13 +763,12 @@ class LocalSearchIndex:
 
     def find_all(self, query: str | list[str]) -> pd.DataFrame:
         """Every hit location (doc_id, field, term, position), 0-based token
-        positions, sorted by (doc_id, field, position, term) — local twin of
-        ``SearchIndex.find_all`` (reference ``Hits`` enumeration,
+        positions, sorted by (doc_id, field, position, term) —
+        ``SearchIndex.find_all`` through the same ``query._hit_frames``
+        (reference ``Hits`` enumeration,
         ``lib/suffix_array_reader.rb:45-72``)."""
         from .query import _hit_frames
-        if not bool(self.meta.get("store_positions", True)):
-            raise ValueError("index built without positions; find_all "
-                             "disabled")
+        require_positions(self, "find_all")
         qterms = _fold_terms(query, self.analyzer)
         present = sorted(set(qterms) & set(self.term_stats(qterms)))
         frames = _hit_frames(pd.DataFrame(
@@ -656,22 +859,6 @@ class LocalSearchIndex:
                 [u.get(int(d)) for d in out["doc_id"]], dtype=object))
         return out
 
-    def _positions(self, streams: dict) -> dict[int, dict[str, dict]]:
-        """field -> term -> decoded postings with positions: one bulk
-        decode per (field, term) over every bucket's and chunk's blocks."""
-        from .query import _decode_with_positions
-        out: dict[int, dict[str, dict]] = {}
-        for (t, f), g in streams.items():
-            out.setdefault(f, {})[t] = _decode_with_positions(
-                g, self.codec_name)
-        return out
-
-    def _phrase_variants(self, phrase: str,
-                         max_expansions: int | None = None) -> list[list[str]]:
-        from .query import _phrase_variants_for
-        return _phrase_variants_for(self.analyzer, self.expand_prefix,
-                                    phrase, max_expansions)
-
     def count_prefix(self, prefix: str) -> int:
         """Exact, uncapped occurrence count of tokens starting with
         ``prefix`` — sums cf over the sorted terms-table range
@@ -682,58 +869,29 @@ class LocalSearchIndex:
         r = _prefix_range(self._t_term, p)
         return int(self._t_cf[r.start:r.stop].sum())
 
-    def _phrase_match_rows(self, variants: list[list[str]],
-                           max_end: int | None = None,
-                           exclude: list[str] | None = None,
-                           pre: int = 0, post: int = 0
-                           ) -> pd.DataFrame | None:
-        """(doc_id, field, tf, dl) matches of ANY variant, tf summed — the
-        local twin of ``SearchIndex._phrase_matches`` (span constraints
-        included: same shared kernel)."""
-        from .query import _variants_match_rows
-        if not bool(self.meta.get("store_positions", True)):
-            raise ValueError("index built without positions; phrase disabled")
-        variants = [v for v in variants if v]
-        stats = self.term_stats(sorted({t for v in variants for t in v}))
-        variants = [v for v in variants if all(t in stats for t in v)]
-        if not variants:
-            return None
-        uniq = sorted({t for v in variants for t in v}
-                      | set(exclude or []))
-        return self._field_rows(uniq, lambda data: _variants_match_rows(
-            data, variants, self.tombstones, max_end=max_end,
-            exclude=exclude, pre=pre, post=post))
+    # -- positional queries: plan_spans -> _span_matches -> score ----------
+    def _span_matches(self, plan: SpanPlan) -> pd.DataFrame:
+        """``match_spans`` over every bucket's position streams at once."""
+        return match_spans(positions(self._post.streams(plan.terms),
+                                     self.codec_name),
+                           plan, self.tombstones)
 
-    def _field_rows(self, terms: list[str], match) -> pd.DataFrame | None:
-        """(doc_id, field, tf, dl): ``match`` applied to each field's
-        decoded positions of ``terms``, over all buckets at once."""
-        by_field = self._positions(self._post.streams(terms))
-        frames = [m.assign(field=np.int32(fid)) for fid in sorted(by_field)
-                  if (m := match(by_field[fid])) is not None]
-        if not frames:
-            return None
-        return pd.concat(frames, ignore_index=True)[
-            ["doc_id", "field", "tf", "dl"]]
+    def _ranked_spans(self, plan: SpanPlan | None, k: int, offset: int,
+                      quantize: int | None,
+                      weights: list[float] | None) -> pd.DataFrame:
+        if plan is None:
+            return _empty_result()
+        return self._score_phrase_rows(self._span_matches(plan), k, offset,
+                                       quantize, weights)
 
     def count_phrase(self, phrase: str, prefix: bool = False,
                      max_expansions: int = 256) -> int:
-        """Local twin of ``SearchIndex.count_phrase`` (reference count_hits
-        suffix semantics; tombstone-consistent, single-token prefix counts
-        always exact and uncapped — see the distributed docstring)."""
-        live = self.tombstones is not None
-        from .query import _phrase_count_cap
-        cap = _phrase_count_cap(self.analyzer, phrase, prefix, live,
-                                max_expansions)
-        variants = self._phrase_variants(phrase, cap)
-        if variants and all(len(v) == 1 for v in variants) and not live:
-            if prefix:
-                tok, _ = ANALYZERS[self.analyzer]
-                last = [ascii_fold(t) for t in tok(ascii_fold(phrase))][-1]
-                return self.count_prefix(last)
-            st = self.term_stats([v[0] for v in variants])
-            return sum(f["cf"] for d in st.values() for f in d.values())
-        m = self._phrase_match_rows(variants)
-        return 0 if m is None else int(m["tf"].sum())
+        """``SearchIndex.count_phrase``: the shared ``plan_phrase_count``,
+        then ``match_spans``."""
+        p = plan_phrase_count(self, phrase, prefix, max_expansions)
+        if not isinstance(p, SpanPlan):
+            return p
+        return int(self._span_matches(p)["tf"].sum())
 
     def search_phrase(self, phrase: str, k: int = 10, offset: int = 0,
                       quantize: int | None = None,
@@ -742,167 +900,102 @@ class LocalSearchIndex:
         ``SearchIndex.search_phrase`` (phrase scored as a pseudo-term with
         per-field df/idf; a phrase never crosses a field boundary), answered
         from the serving copy's row slices."""
-        m = self._phrase_match_rows(self._phrase_variants(phrase))
-        if m is None:
-            return _empty_result()
-        return self._score_phrase_rows(m, k, offset, quantize, weights)
+        p = plan_spans(self, _phrase_variants(self, phrase), k=k,
+                       offset=offset)
+        return self._ranked_spans(p, k, offset, quantize, weights)
 
     def search_phrase_prefix(self, phrase: str, k: int = 10, offset: int = 0,
                              max_expansions: int = 16,
                              quantize: int | None = None,
                              weights: list[float] | None = None
                              ) -> pd.DataFrame:
-        """Local twin of ``SearchIndex.search_phrase_prefix``."""
-        m = self._phrase_match_rows(
-            self._phrase_variants(phrase, max_expansions))
-        if m is None:
-            return _empty_result()
-        return self._score_phrase_rows(m, k, offset, quantize, weights)
+        """``SearchIndex.search_phrase_prefix`` (shared ``plan_spans``)."""
+        p = plan_spans(self, _phrase_variants(self, phrase, max_expansions),
+                       k=k, offset=offset)
+        return self._ranked_spans(p, k, offset, quantize, weights)
 
     def search_phrases_any(self, phrases: list[str], k: int = 10,
                            offset: int = 0, quantize: int | None = None,
                            weights: list[float] | None = None
                            ) -> pd.DataFrame:
-        """Local twin of ``SearchIndex.search_phrases_any`` (SpanOr over
-        phrase clauses)."""
-        variants = []
-        for p in phrases:
-            variants.extend(self._phrase_variants(p))
-        if not variants:
-            return _empty_result()
-        m = self._phrase_match_rows(variants)
-        if m is None:
-            return _empty_result()
-        return self._score_phrase_rows(m, k, offset, quantize, weights)
+        """``SearchIndex.search_phrases_any`` (shared ``plan_spans``)."""
+        p = plan_spans(self, _spanor_variants(self, phrases), k=k,
+                       offset=offset)
+        return self._ranked_spans(p, k, offset, quantize, weights)
 
     def search_span_first(self, phrase: str, max_end: int, k: int = 10,
                           offset: int = 0, quantize: int | None = None,
                           weights: list[float] | None = None
                           ) -> pd.DataFrame:
-        """Local twin of ``SearchIndex.search_span_first`` (same span
-        kernel, identical results)."""
-        if max_end <= 0:
-            raise ValueError("max_end must be positive")
-        m = self._phrase_match_rows(self._phrase_variants(phrase),
-                                    max_end=int(max_end))
-        if m is None:
-            return _empty_result()
-        return self._score_phrase_rows(m, k, offset, quantize, weights)
+        """``SearchIndex.search_span_first`` (shared ``plan_spans``)."""
+        p = plan_spans(self, _phrase_variants(self, phrase), k=k,
+                       offset=offset, max_end=max_end)
+        return self._ranked_spans(p, k, offset, quantize, weights)
 
     def search_span_not(self, phrase: str, exclude: str | list[str],
                         k: int = 10, pre: int = 0, post: int = 0,
                         offset: int = 0, quantize: int | None = None,
                         weights: list[float] | None = None) -> pd.DataFrame:
-        """Local twin of ``SearchIndex.search_span_not``."""
-        from .analysis import ANALYZERS, ascii_fold
-        if pre < 0 or post < 0:
-            raise ValueError("pre/post must be >= 0")
-        tok, _ = ANALYZERS[self.analyzer]
-        parts = [exclude] if isinstance(exclude, str) else list(exclude)
-        ex = sorted({ascii_fold(t) for p in parts for t in tok(p)})
-        if not ex:
-            raise ValueError("empty exclude terms")
-        m = self._phrase_match_rows(self._phrase_variants(phrase),
-                                    exclude=ex, pre=int(pre),
-                                    post=int(post))
-        if m is None:
-            return _empty_result()
-        return self._score_phrase_rows(m, k, offset, quantize, weights)
-
-    def _spanor_variants(self, q) -> list[list[str]]:
-        parts = [q] if isinstance(q, str) else [p for p in q if p]
-        out: list[list[str]] = []
-        for p in parts:
-            out.extend(self._phrase_variants(p))
-        return out
-
-    def _enclosure_match_rows(self, keeps: list[list[str]],
-                              others: list[list[str]],
-                              mode: str) -> pd.DataFrame | None:
-        """Local twin of ``SearchIndex._enclosure_matches`` (same shared
-        ``_variants_enclosure_rows`` kernel, identical results)."""
-        from .query import _variants_enclosure_rows
-        if not bool(self.meta.get("store_positions", True)):
-            raise ValueError("index built without positions; span "
-                             "queries disabled")
-        keeps = [v for v in keeps if v]
-        others = [v for v in others if v]
-        stats = self.term_stats(sorted({t for v in keeps + others
-                                        for t in v}))
-        keeps = [v for v in keeps if all(t in stats for t in v)]
-        others = [v for v in others if all(t in stats for t in v)]
-        if not keeps or not others:
-            return None
-        uniq = sorted({t for v in keeps + others for t in v})
-        return self._field_rows(uniq, lambda data: _variants_enclosure_rows(
-            data, keeps, others, self.tombstones, mode))
+        """``SearchIndex.search_span_not`` (shared ``plan_spans``)."""
+        p = plan_spans(self, _phrase_variants(self, phrase), k=k,
+                       offset=offset, exclude=exclude, pre=pre, post=post)
+        return self._ranked_spans(p, k, offset, quantize, weights)
 
     def search_span_within(self, little, big, k: int = 10,
                            offset: int = 0, quantize: int | None = None,
                            weights: list[float] | None = None
                            ) -> pd.DataFrame:
-        """Local twin of ``SearchIndex.search_span_within``."""
-        m = self._enclosure_match_rows(self._spanor_variants(little),
-                                       self._spanor_variants(big),
-                                       "within")
-        if m is None:
-            return _empty_result()
-        return self._score_phrase_rows(m, k, offset, quantize, weights)
+        """``SearchIndex.search_span_within`` (shared ``plan_spans``)."""
+        p = plan_spans(self, _spanor_variants(self, little),
+                       _spanor_variants(self, big), "within", k=k,
+                       offset=offset)
+        return self._ranked_spans(p, k, offset, quantize, weights)
 
     def search_span_containing(self, big, little, k: int = 10,
                                offset: int = 0, quantize: int | None = None,
                                weights: list[float] | None = None
                                ) -> pd.DataFrame:
-        """Local twin of ``SearchIndex.search_span_containing``."""
-        m = self._enclosure_match_rows(self._spanor_variants(big),
-                                       self._spanor_variants(little),
-                                       "containing")
-        if m is None:
-            return _empty_result()
-        return self._score_phrase_rows(m, k, offset, quantize, weights)
+        """``SearchIndex.search_span_containing`` (shared ``plan_spans``)."""
+        p = plan_spans(self, _spanor_variants(self, big),
+                       _spanor_variants(self, little), "containing", k=k,
+                       offset=offset)
+        return self._ranked_spans(p, k, offset, quantize, weights)
 
     def search_near(self, query: str | list[str], slop: int, k: int = 10,
                     offset: int = 0, quantize: int | None = None,
                     weights: list[float] | None = None) -> pd.DataFrame:
-        """Proximity (SLOP) search — local twin of
-        ``SearchIndex.search_near``: same shared window kernel
-        (``query._near_match_docs``), same plan and executor (``execute``
-        restricted to the window-matching docs), identical results."""
-        from .query import _near_match_docs
-        if not bool(self.meta.get("store_positions", True)):
-            raise ValueError("index built without positions; proximity "
-                             "search disabled")
+        """Proximity (SLOP) search — ``SearchIndex.search_near``: the
+        shared window test (``near_docs``) over all buckets' positions,
+        then the shared plan and executor (``execute`` restricted to the
+        window-matching docs), identical results."""
+        require_positions(self, "proximity search")
         p = plan_search(self, query, k=k, mode="AND", offset=offset,
                         quantize=quantize, weights=weights)
         if p is None:
             return _empty_result()
         streams = self._post.streams(p.terms)
-        allowed = []
-        for data in self._positions(streams).values():
-            if all(t in data for t in p.terms):
-                m = _near_match_docs(data, p.terms, int(slop),
-                                     self.tombstones)
-                if m.size:
-                    allowed.append(m)
-        if not allowed:
+        keep = near_docs(positions(streams, self.codec_name), p.terms,
+                         int(slop), self.tombstones)
+        if keep is None:
             return _empty_result()
         # window matches are live docs already: no tombstone pass
-        docs, scores = execute(streams, p, None, p.k,
-                               keep=np.unique(np.concatenate(allowed)))
+        docs, scores = execute(streams, p, None, p.k, keep=keep)
         return pd.DataFrame({"doc_id": docs[offset:],
                              "score": scores[offset:]})
 
     def _score_phrase_rows(self, m: pd.DataFrame, k: int, offset: int,
                            quantize: int | None = None,
                            weights: list[float] | None = None) -> pd.DataFrame:
-        check_page(k, offset)
+        """Top ``k`` after ``offset`` of phrase match rows scored as one
+        pseudo-term: the numpy form of ``SearchIndex._phrase_sums``, same
+        parenthesization, the span scorer that runs without Spark."""
         w = list(weights) if weights is not None else None
         if w is not None:
             keep = m["field"].map(
                 lambda f: int(f) < len(w) and w[int(f)] != 0.0)
             m = m[keep.to_numpy()]
-            if not len(m):
-                return _empty_result()
+        if not len(m):
+            return _empty_result()
         m = m.sort_values(["doc_id", "field"], kind="mergesort")
         k1, b = 1.2, 0.75
         score = np.zeros(len(m), dtype=np.float64)

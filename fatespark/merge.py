@@ -38,6 +38,7 @@ import pandas as pd
 from .codec import (
     encode_grouped,
     get_codec,
+    not_in_sorted,
     segmented_cumsum_u64,
     segmented_delta,
     varint_decode_concat,
@@ -121,10 +122,7 @@ def merge_rows_vectorized(pdf: pd.DataFrame, block_size: int = 128,
         from .codec import _i64_to_u64_ordered
         drop_u = np.sort(_i64_to_u64_ordered(
             np.asarray(drop_docs, dtype=np.int64)))
-        j = np.searchsorted(drop_u, du)
-        hit = j < drop_u.size
-        hit[hit] = drop_u[j[hit]] == du[hit]
-        keep = ~hit
+        keep = not_in_sorted(du, drop_u)
         if has_pos:
             src_pos = src_pos[np.repeat(keep, tfs)]
         du, tfs, dls, gid = du[keep], tfs[keep], dls[keep], gid[keep]

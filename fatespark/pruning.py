@@ -55,6 +55,7 @@ from .codec import (
     _u64_to_i64_ordered,
     encode_grouped,
     get_codec,
+    not_in_sorted,
     segmented_cumsum_u64,
     segmented_delta,
     varint_decode_concat,
@@ -84,16 +85,6 @@ def _row_starts(ns: np.ndarray) -> np.ndarray:
     return starts
 
 
-def _tomb_keep(du: np.ndarray, tombs_u64: np.ndarray | None) -> np.ndarray:
-    keep = np.ones(du.size, dtype=bool)
-    if tombs_u64 is None or not tombs_u64.size or not du.size:
-        return keep
-    j = np.searchsorted(tombs_u64, du)
-    hit = j < tombs_u64.size
-    hit[hit] = tombs_u64[j[hit]] == du[hit]
-    return ~hit
-
-
 def _partials_fn(codec_name: str, k_prune: int, field_avgdl: dict,
                  avgdl: float, tombs_u64: np.ndarray | None):
     """Pass-A batch kernel: per (term, field) run in the batch, emit the
@@ -119,7 +110,7 @@ def _partials_fn(codec_name: str, k_prune: int, field_avgdl: dict,
             if tombs_u64 is not None and tombs_u64.size:
                 d_gaps = c.decode_concat(list(pdf["docs"]), ns, total)
                 du = segmented_cumsum_u64(d_gaps, starts)
-                keep = _tomb_keep(du, tombs_u64)
+                keep = not_in_sorted(du, tombs_u64)
             else:
                 keep = None
             # per-field avgdl vector, then the engine's exact part kernel
@@ -191,7 +182,7 @@ def _rewrite_fn(codec_name: str, field_avgdl: dict, avgdl: float,
             part = _part_vec(tfs, dls, np.repeat(av, ns))
             tau = np.repeat(pdf["tau"].to_numpy(np.float64), ns)
             keep = part > tau
-            keep &= _tomb_keep(du, tombs_u64)
+            keep &= not_in_sorted(du, tombs_u64)
             if has_pos:
                 tok_keep = np.repeat(keep, tfs)
             kept_per_row = np.add.reduceat(keep.astype(np.int64), starts) \

@@ -27,14 +27,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .analysis import ANALYZERS, ascii_fold
-from .codec import (_u64_to_i64_ordered, get_codec, segmented_cumsum_u64,
-                    varint_decode_concat)
-from .local import (Plan, _fold_terms, check_page, doc_set, execute,
-                    plan_search, restrict, score_streams, stream_docs)
+from .codec import (_u64_to_i64_ordered, get_codec, not_in_sorted,
+                    segmented_cumsum_u64, varint_decode_concat)
+from .local import (Plan, SpanPlan, _empty_result, _fold_terms,
+                    _phrase_variants, _spanor_variants, check_page, doc_set,
+                    execute, match_spans, near_docs, plan_phrase_count,
+                    plan_search, plan_spans, positions, require_positions,
+                    restrict, score_streams, stream_docs)
 from .oracle import idf as idf_fn
 from .wand import B, K1
 
 RESULT_SCHEMA = "doc_id long, score double"
+SPAN_SCHEMA = "doc_id long, field int, tf int, dl int"  # local.match_spans
 
 # tombstone sets up to this size ship inline in task closures (fast, no
 # broadcast round-trip); larger sets go through a Spark broadcast variable
@@ -220,9 +224,7 @@ class SearchIndex:
         come straight from the index's posting position lists (no corpus
         re-scan); tombstoned docs are filtered. Attach surrounding text
         with ``hit_contexts`` (the ``Hit#context`` analogue)."""
-        if not self.store_positions:
-            raise ValueError("index built without positions; find_all "
-                             "disabled")
+        require_positions(self, "find_all")
         qterms = _fold_terms(query, self.analyzer)
         stats = self.term_stats(qterms)
         present = sorted({t for t in qterms if t in stats})
@@ -656,11 +658,26 @@ class SearchIndex:
             "min_dl", "docs", "tfs", "dls")
         return blocks.groupBy("bucket").applyInPandas(scorer, RESULT_SCHEMA)
 
-    # -- phrase ----------------------------------------------------------------
+    # -- phrase and span: local.plan_spans -> _span_matches -> score ---------
     def _phrase_variants(self, phrase: str,
                          max_expansions: int | None = None) -> list[list[str]]:
-        return _phrase_variants_for(self.analyzer, self.expand_prefix,
-                                    phrase, max_expansions)
+        """The shared ``local._phrase_variants`` over this reader."""
+        return _phrase_variants(self, phrase, max_expansions)
+
+    def _span_matches(self, plan: SpanPlan) -> DataFrame:
+        """(doc_id, field, tf, dl) of ``plan`` (``local.plan_spans``): one
+        postings scan of the plan's terms, then ``local.match_spans`` over
+        each bucket's ``local.positions``. Each (term, field) stream decodes
+        once per bucket, however many variants share it."""
+        tombs_ref, codec = self._tombs_ref(), self.codec_name
+
+        def matcher(pdf: pd.DataFrame) -> pd.DataFrame:
+            return match_spans(positions(_stream_rows(pdf), codec), plan,
+                               tombs_ref.get())
+
+        blocks = self.postings.filter(F.col("term").isin(plan.terms)).select(
+            "bucket", "term", "field", "n", "docs", "tfs", "dls", "poss")
+        return blocks.groupBy("bucket").applyInPandas(matcher, SPAN_SCHEMA)
 
     def _phrase_matches(self, variants: list[list[str]],
                         max_end: int | None = None,
@@ -669,52 +686,30 @@ class SearchIndex:
         """(doc_id, field, tf, dl) for docs matching ANY variant, tf summed
         across variants — at a given token position exactly one variant can
         match (a position holds one term), so occurrences are disjoint and
-        the sum is the exact total. One match pass decodes each term once
-        per (bucket, field) no matter how many variants share it.
-        ``max_end``/``exclude``/``pre``/``post`` are the span constraints
-        (see ``_match_variant_rows``); excluded terms ride the same
-        postings fetch but never gate the match."""
-        if not self.store_positions:
-            raise ValueError("index built without positions; phrase disabled")
-        variants = [v for v in variants if v]
-        stats = self.term_stats(sorted({t for v in variants for t in v}))
-        variants = [v for v in variants if all(t in stats for t in v)]
-        if not variants:
-            return None
-        uniq = sorted({t for v in variants for t in v}
-                      | set(exclude or []))
+        the sum is the exact total. ``max_end``/``exclude``/``pre``/``post``
+        are the span constraints (see ``_match_variant_rows``); excluded
+        terms ride the same postings fetch but never gate the match. None
+        when nothing can match (``plan_spans`` + ``_span_matches``)."""
+        p = plan_spans(self, variants, max_end=max_end, exclude=exclude,
+                       pre=pre, post=post)
+        return None if p is None else self._span_matches(p)
 
-        tombs_ref = self._tombs_ref()
-        codec = self.codec_name
+    def _enclosure_matches(self, keeps: list[list[str]],
+                           others: list[list[str]],
+                           mode: str) -> DataFrame | None:
+        """(doc_id, field, tf, dl) for span-enclosure matches — the
+        two-span-set analogue of ``_phrase_matches``; both sides ride ONE
+        postings scan (shared terms decode once per bucket/field)."""
+        p = plan_spans(self, keeps, others, mode)
+        return None if p is None else self._span_matches(p)
 
-        def matcher(pdf: pd.DataFrame) -> pd.DataFrame:
-            tombs = tombs_ref.get()
-            empty = pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                                  "field": pd.array([], dtype="int32"),
-                                  "tf": pd.array([], dtype="int32"),
-                                  "dl": pd.array([], dtype="int32")})
-            outs = [empty]
-            # phrase matches are per (doc, field): a phrase never crosses a
-            # field boundary (unlike the reference's heap-wide byte match,
-            # an acknowledged artifact of its single fulltext stream)
-            for fid, fpdf in pdf.groupby("field"):
-                data = {t: _decode_with_positions(g, codec)
-                        for t, g in fpdf.groupby("term")}
-                m = _variants_match_rows(data, variants, tombs,
-                                         max_end=max_end, exclude=exclude,
-                                         pre=pre, post=post)
-                if m is not None:
-                    outs.append(pd.DataFrame({
-                        "doc_id": m["doc_id"].astype("int64"),
-                        "field": np.full(len(m), int(fid), dtype=np.int32),
-                        "tf": m["tf"].astype("int32"),
-                        "dl": m["dl"].astype("int32")}))
-            return pd.concat(outs, ignore_index=True)
-
-        blocks = self.postings.filter(F.col("term").isin(uniq)).select(
-            "bucket", "term", "field", "n", "docs", "tfs", "dls", "poss")
-        return blocks.groupBy("bucket").applyInPandas(
-            matcher, "doc_id long, field int, tf int, dl int")
+    def _ranked_spans(self, plan: SpanPlan | None, k: int, offset: int,
+                      with_url: bool, quantize: int | None,
+                      weights: list[float] | None) -> DataFrame:
+        if plan is None:
+            return self._empty()
+        return self._score_phrase_matches(self._span_matches(plan), k, offset,
+                                          with_url, quantize, weights)
 
     def count_prefix(self, prefix: str) -> int:
         """EXACT total occurrences of tokens starting with ``prefix`` — a
@@ -737,11 +732,9 @@ class SearchIndex:
         occurrences, df = matching docs). Two jobs: match (needs positions),
         then JVM-side BM25 over the (tiny) match set. ``quantize``/
         ``weights`` as in ``search``."""
-        m = self._phrase_matches(self._phrase_variants(phrase))
-        if m is None:
-            return self._empty()
-        return self._score_phrase_matches(m, k, offset, with_url, quantize,
-                                          weights)
+        p = plan_spans(self, _phrase_variants(self, phrase), k=k,
+                       offset=offset)
+        return self._ranked_spans(p, k, offset, with_url, quantize, weights)
 
     def search_phrases_any(self, phrases: list[str], k: int = 10,
                            offset: int = 0, with_url: bool = False,
@@ -754,48 +747,57 @@ class SearchIndex:
         already runs for multi-token expansions, surfaced for caller-
         provided clauses; one postings scan covers every clause (shared
         terms decode once per bucket/field). Lucene parity target-new."""
-        variants = []
-        for p in phrases:
-            variants.extend(self._phrase_variants(p))
-        if not variants:
-            return self._empty()
-        m = self._phrase_matches(variants)
-        if m is None:
-            return self._empty()
-        return self._score_phrase_matches(m, k, offset, with_url, quantize,
-                                          weights)
+        p = plan_spans(self, _spanor_variants(self, phrases), k=k,
+                       offset=offset)
+        return self._ranked_spans(p, k, offset, with_url, quantize, weights)
 
-    def _phrase_contrib(self, matches: DataFrame) -> DataFrame | None:
-        """(doc_id, s) unranked pseudo-term BM25 contributions for one
-        clause-set match table — the scoring half of
-        ``_score_phrase_matches`` without quantize/top-k, for callers
-        that SUM several pseudo-terms (synonym graph). Same expression
-        parenthesization, so per-position scores are bit-identical to a
-        standalone ``search_phrases_any``."""
-        matches = matches.cache()
+    def _phrase_sums(self, matches: DataFrame,
+                     weights: list[float] | None = None) -> DataFrame | None:
+        """(doc_id, s): each doc's BM25 of a (cached) phrase match table
+        scored as one pseudo-term — per field f, idf from the field's
+        phrase df (times ``weights[f]``) over the row's tf and dl, summed
+        over fields. Rows of weight-0 fields drop before the sum. None when
+        no field scores. The one expression ``_score_phrase_matches`` and
+        ``_phrase_contrib`` share; same parenthesization as the oracle and
+        the local scorer."""
         per_field = {int(r["field"]): int(r["n"]) for r in
                      matches.groupBy("field").agg(
                          F.count("*").alias("n")).collect()}
+        if weights is not None:
+            per_field = {f: n for f, n in per_field.items()
+                         if f < len(weights) and weights[f] != 0.0}
         if not per_field:
-            matches.unpersist()
             return None
-        k1, b = 1.2, 0.75
         score = None
         for f, dfp in sorted(per_field.items()):
             iv = idf_fn(self.n_docs, dfp)
+            if weights is not None:
+                iv = weights[f] * iv
             ad = self.field_avgdl.get(f, self.avgdl)
-            norm = (1.0 - b) + b * F.col("dl") / F.lit(ad) if ad > 0 \
-                else F.lit(1.0 - b)
-            s_f = F.lit(iv) * (F.col("tf") * F.lit(k1 + 1.0) / (
-                F.col("tf") + F.lit(k1) * norm))
+            norm = (1.0 - B) + B * F.col("dl") / F.lit(ad) if ad > 0 \
+                else F.lit(1.0 - B)
+            s_f = F.lit(iv) * (F.col("tf") * F.lit(K1 + 1.0) / (
+                F.col("tf") + F.lit(K1) * norm))
             s_f = F.when(F.col("field") == f, s_f)
             score = s_f if score is None else F.coalesce(s_f, score)
-        out = (matches.select("doc_id", score.alias("s"))
-               .where(F.col("s").isNotNull())
-               .groupBy("doc_id").agg(F.sum("s").alias("s"))
-               .localCheckpoint(eager=True))
-        matches.unpersist()
-        return out
+        # the when/coalesce chain is NULL for weight-excluded fields, and
+        # groupBy.sum over an all-NULL group would emit (doc, NULL) rows
+        return (matches.select("doc_id", score.alias("s"))
+                .where(F.col("s").isNotNull())
+                .groupBy("doc_id").agg(F.sum("s").alias("s")))
+
+    def _phrase_contrib(self, matches: DataFrame) -> DataFrame | None:
+        """(doc_id, s) unranked pseudo-term BM25 contributions for one
+        clause-set match table — ``_phrase_sums`` without quantize/top-k,
+        for callers that SUM several pseudo-terms (synonym graph), so
+        per-position scores are bit-identical to a standalone
+        ``search_phrases_any``."""
+        matches = matches.cache()
+        try:
+            s = self._phrase_sums(matches)
+            return None if s is None else s.localCheckpoint(eager=True)
+        finally:
+            matches.unpersist()
 
     def search_synonym_graph(self, qterms: list[str],
                              graph: dict[str, list[str]], k: int = 10,
@@ -822,10 +824,8 @@ class SearchIndex:
             raise ValueError("synonym graph search needs >= 1 term")
         contribs = []
         for t in qterms:
-            variants = []
-            for p in [t, *graph.get(t, ())]:
-                variants.extend(self._phrase_variants(p))
-            m = self._phrase_matches(variants) if variants else None
+            m = self._phrase_matches(
+                _spanor_variants(self, [t, *graph.get(t, ())]))
             contribs.append(self._phrase_contrib(m) if m is not None
                             else None)
         arms = [(i, c) for i, c in enumerate(contribs) if c is not None]
@@ -868,14 +868,9 @@ class SearchIndex:
         kernel. Reference analogue: offset-bounded suffix-array range scan
         (``lib/suffix_array_reader.rb:45-72`` exposes match offsets);
         Lucene parity target-new."""
-        if max_end <= 0:
-            raise ValueError("max_end must be positive")
-        m = self._phrase_matches(self._phrase_variants(phrase),
-                                 max_end=int(max_end))
-        if m is None:
-            return self._empty()
-        return self._score_phrase_matches(m, k, offset, with_url, quantize,
-                                          weights)
+        p = plan_spans(self, _phrase_variants(self, phrase), k=k,
+                       offset=offset, max_end=max_end)
+        return self._ranked_spans(p, k, offset, with_url, quantize, weights)
 
     def search_span_not(self, phrase: str, exclude: str | list[str],
                         k: int = 10, pre: int = 0, post: int = 0,
@@ -890,71 +885,9 @@ class SearchIndex:
         Excluded terms ride the same postings fetch (no extra scan); an
         exclude term absent from the index excludes nothing, per Lucene.
         Lucene parity target-new."""
-        if pre < 0 or post < 0:
-            raise ValueError("pre/post must be >= 0")
-        tok, _ = ANALYZERS[self.analyzer]
-        parts = [exclude] if isinstance(exclude, str) else list(exclude)
-        ex = sorted({ascii_fold(t) for p in parts for t in tok(p)})
-        if not ex:
-            raise ValueError("empty exclude terms")
-        m = self._phrase_matches(self._phrase_variants(phrase),
-                                 exclude=ex, pre=int(pre), post=int(post))
-        if m is None:
-            return self._empty()
-        return self._score_phrase_matches(m, k, offset, with_url, quantize,
-                                          weights)
-
-    def _enclosure_matches(self, keeps: list[list[str]],
-                           others: list[list[str]],
-                           mode: str) -> DataFrame | None:
-        """(doc_id, field, tf, dl) for span-enclosure matches — the
-        two-span-set analogue of ``_phrase_matches``; both sides ride ONE
-        postings scan (shared terms decode once per bucket/field)."""
-        if not self.store_positions:
-            raise ValueError("index built without positions; span "
-                             "queries disabled")
-        keeps = [v for v in keeps if v]
-        others = [v for v in others if v]
-        stats = self.term_stats(sorted({t for v in keeps + others
-                                        for t in v}))
-        keeps = [v for v in keeps if all(t in stats for t in v)]
-        others = [v for v in others if all(t in stats for t in v)]
-        if not keeps or not others:
-            return None                  # no enclosure possible
-        uniq = sorted({t for v in keeps + others for t in v})
-        tombs_ref, codec = self._tombs_ref(), self.codec_name
-
-        def matcher(pdf: pd.DataFrame) -> pd.DataFrame:
-            tombs = tombs_ref.get()
-            empty = pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                                  "field": pd.array([], dtype="int32"),
-                                  "tf": pd.array([], dtype="int32"),
-                                  "dl": pd.array([], dtype="int32")})
-            outs = [empty]
-            for fid, fpdf in pdf.groupby("field"):
-                data = {t: _decode_with_positions(g, codec)
-                        for t, g in fpdf.groupby("term")}
-                m = _variants_enclosure_rows(data, keeps, others, tombs,
-                                             mode)
-                if m is not None:
-                    outs.append(pd.DataFrame({
-                        "doc_id": m["doc_id"].astype("int64"),
-                        "field": np.full(len(m), int(fid), dtype=np.int32),
-                        "tf": m["tf"].astype("int32"),
-                        "dl": m["dl"].astype("int32")}))
-            return pd.concat(outs, ignore_index=True)
-
-        blocks = self.postings.filter(F.col("term").isin(uniq)).select(
-            "bucket", "term", "field", "n", "docs", "tfs", "dls", "poss")
-        return blocks.groupBy("bucket").applyInPandas(
-            matcher, "doc_id long, field int, tf int, dl int")
-
-    def _spanor_variants(self, q: str | list[str]) -> list[list[str]]:
-        parts = [q] if isinstance(q, str) else [p for p in q if p]
-        out: list[list[str]] = []
-        for p in parts:
-            out.extend(self._phrase_variants(p))
-        return out
+        p = plan_spans(self, _phrase_variants(self, phrase), k=k,
+                       offset=offset, exclude=exclude, pre=pre, post=post)
+        return self._ranked_spans(p, k, offset, with_url, quantize, weights)
 
     def search_span_within(self, little: str | list[str],
                            big: str | list[str], k: int = 10,
@@ -971,12 +904,10 @@ class SearchIndex:
         Scored as one pseudo-term like every span query here. Lucene
         parity target-new; reference analogue: position-filtered
         suffix-array hits (``lib/suffix_array_reader.rb:45-72``)."""
-        m = self._enclosure_matches(self._spanor_variants(little),
-                                    self._spanor_variants(big), "within")
-        if m is None:
-            return self._empty()
-        return self._score_phrase_matches(m, k, offset, with_url, quantize,
-                                          weights)
+        p = plan_spans(self, _spanor_variants(self, little),
+                       _spanor_variants(self, big), "within", k=k,
+                       offset=offset)
+        return self._ranked_spans(p, k, offset, with_url, quantize, weights)
 
     def search_span_containing(self, big: str | list[str],
                                little: str | list[str], k: int = 10,
@@ -989,13 +920,10 @@ class SearchIndex:
         lists). The dual of ``search_span_within`` — tf counts qualifying
         big spans; same one-scan, searchsorted-probe kernel with the
         enclosure interval reversed."""
-        m = self._enclosure_matches(self._spanor_variants(big),
-                                    self._spanor_variants(little),
-                                    "containing")
-        if m is None:
-            return self._empty()
-        return self._score_phrase_matches(m, k, offset, with_url, quantize,
-                                          weights)
+        p = plan_spans(self, _spanor_variants(self, big),
+                       _spanor_variants(self, little), "containing", k=k,
+                       offset=offset)
+        return self._ranked_spans(p, k, offset, with_url, quantize, weights)
 
     def search_phrase_prefix(self, phrase: str, k: int = 10, offset: int = 0,
                              max_expansions: int = 16,
@@ -1006,12 +934,9 @@ class SearchIndex:
         ``'big array'`` (``README.markdown:7-11``) — last token expanded
         against the term dictionary, earlier tokens exact, all variants
         matched in one pass and scored as one pseudo-term."""
-        m = self._phrase_matches(
-            self._phrase_variants(phrase, max_expansions))
-        if m is None:
-            return self._empty()
-        return self._score_phrase_matches(m, k, offset, with_url, quantize,
-                                          weights)
+        p = plan_spans(self, _phrase_variants(self, phrase, max_expansions),
+                       k=k, offset=offset)
+        return self._ranked_spans(p, k, offset, with_url, quantize, weights)
 
     def search_near(self, query: str | list[str], slop: int, k: int = 10,
                     offset: int = 0, with_url: bool = False,
@@ -1029,13 +954,11 @@ class SearchIndex:
         The reference answers this shape by walking suffix-array hit
         positions (``lib/suffix_array_reader.rb:45-72`` exposes every match
         offset); here the window test runs bucket-locally over the index's
-        position lists (``_near_match_docs``: exact minimal-covering-window
+        position lists (``local.near_docs``: exact minimal-covering-window
         semantics, vectorized searchsorted over composite doc/pos keys) and
         only window-matching docs enter scoring — one postings scan, no
         corpus access, no extra shuffle (buckets stay doc-disjoint)."""
-        if not self.store_positions:
-            raise ValueError("index built without positions; proximity "
-                             "search disabled")
+        require_positions(self, "proximity search")
         oterms: list[str] | None = None
         if ordered:
             # preserve QUERY order through the analyzer (Lucene ordered
@@ -1056,25 +979,13 @@ class SearchIndex:
         tombs_ref, codec, sl = self._tombs_ref(), self.codec_name, int(slop)
 
         def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
-            tombs = tombs_ref.get()
-            allowed = []
-            for _fid, fpdf in pdf.groupby("field"):
-                data = {t: _decode_with_positions(g, codec)
-                        for t, g in fpdf.groupby("term")}
-                if any(t not in data for t in p.terms):
-                    continue
-                if oterms is not None:
-                    m = _ordered_near_match_docs(data, oterms, sl, tombs)
-                else:
-                    m = _near_match_docs(data, p.terms, sl, tombs)
-                if m.size:
-                    allowed.append(m)
-            if not allowed:
-                return pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                                     "score": pd.array([], dtype="float64")})
+            rows = _stream_rows(pdf)
+            keep = near_docs(positions(rows, codec), p.terms, sl,
+                             tombs_ref.get(), oterms)
+            if keep is None:
+                return _empty_result()
             # window matches are live docs already: no tombstone pass
-            docs, scores = execute(_stream_rows(pdf), p, None, p.k,
-                                   keep=np.unique(np.concatenate(allowed)))
+            docs, scores = execute(rows, p, None, p.k, keep=keep)
             return pd.DataFrame({"doc_id": docs, "score": scores})
 
         blocks = self.postings.filter(F.col("term").isin(p.terms)).select(
@@ -1105,9 +1016,7 @@ class SearchIndex:
         the index; per-bucket top-k happens AFTER boosting (the boost
         changes ranks), buckets stay doc-complete so the global top-k is
         exact."""
-        if not self.store_positions:
-            raise ValueError("index built without positions; proximity "
-                             "boost disabled")
+        require_positions(self, "proximity boost")
         if c < 0:
             raise ValueError("c must be >= 0")
         # unquantized plan: the boost is applied, then quantized, after
@@ -1122,11 +1031,10 @@ class SearchIndex:
         def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
             from .wand import topk_select
             tombs = tombs_ref.get()
+            rows = _stream_rows(pdf)
             span_ids: list[np.ndarray] = []
             span_vals: list[np.ndarray] = []
-            for _fid, fpdf in pdf.groupby("field"):
-                data = {t: _decode_with_positions(g, codec)
-                        for t, g in fpdf.groupby("term")}
+            for data in positions(rows, codec).values():
                 if any(t not in data for t in p.terms):
                     continue
                 ids, spans = _min_spans(data, p.terms, tombs)
@@ -1134,8 +1042,7 @@ class SearchIndex:
                     span_ids.append(ids)
                     span_vals.append(spans)
             if not span_ids:
-                return pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                                     "score": pd.array([], dtype="float64")})
+                return _empty_result()
             all_ids = np.concatenate(span_ids)
             all_spans = np.concatenate(span_vals)
             order = np.lexsort((all_spans, all_ids))
@@ -1143,8 +1050,7 @@ class SearchIndex:
                 ([True], all_ids[order][1:] != all_ids[order][:-1]))
             ids = all_ids[order][keep]          # sorted unique doc ids
             spans = all_spans[order][keep]      # min across fields
-            docs, scores = execute(_stream_rows(pdf), p, None,
-                                   int(ids.size), keep=ids)
+            docs, scores = execute(rows, p, None, int(ids.size), keep=ids)
             at = np.searchsorted(ids, docs)
             boost = 1.0 + cc / (1.0 + (spans[at].astype(np.float64)
                                        - nm1))
@@ -1175,62 +1081,26 @@ class SearchIndex:
         ``count_prefix`` aggregation, pending deletes via an uncapped
         dictionary expansion feeding the matcher; multi-token prefix counts
         expand at most ``max_expansions`` dictionary terms (raise it for
-        exhaustive counts over adversarial vocabularies)."""
-        live = self.tombstones is not None
-        cap = _phrase_count_cap(self.analyzer, phrase, prefix, live,
-                                max_expansions)
-        variants = self._phrase_variants(phrase, cap)
-        if variants and all(len(v) == 1 for v in variants) and not live:
-            if prefix:  # exact + uncapped: terms-table aggregation
-                tok, _ = ANALYZERS[self.analyzer]
-                last = [ascii_fold(t)
-                        for t in tok(ascii_fold(phrase))][-1]
-                return self.count_prefix(last)
-            st = self.term_stats([v[0] for v in variants])
-            return sum(f["cf"] for d in st.values() for f in d.values())
-        m = self._phrase_matches(variants)
-        if m is None:
-            return 0
-        return int(m.agg(F.sum("tf")).collect()[0][0] or 0)
+        exhaustive counts over adversarial vocabularies). The shared
+        ``local.plan_phrase_count`` picks the path."""
+        p = plan_phrase_count(self, phrase, prefix, max_expansions)
+        if not isinstance(p, SpanPlan):
+            return p
+        return int(self._span_matches(p).agg(F.sum("tf")).collect()[0][0]
+                   or 0)
 
     def _score_phrase_matches(self, matches: DataFrame, k: int, offset: int,
                               with_url: bool,
                               quantize: int | None = None,
                               weights: list[float] | None = None) -> DataFrame:
-        check_page(k, offset)
-        w = list(weights) if weights is not None else None
+        """Top ``k`` after ``offset`` of a phrase match table scored as one
+        pseudo-term (``_phrase_sums``), in (score DESC, doc_id ASC)."""
         matches = matches.cache()
         try:
-            # per-field phrase df -> per-field idf (phrase as pseudo-term)
-            per_field = {int(r["field"]): int(r["n"]) for r in
-                         matches.groupBy("field").agg(
-                             F.count("*").alias("n")).collect()}
-            if w is not None:
-                per_field = {f: n for f, n in per_field.items()
-                             if f < len(w) and w[f] != 0.0}
-            if not per_field:
+            agg = self._phrase_sums(matches, weights)
+            if agg is None:
                 return self._empty()
-            k1, b = 1.2, 0.75
-            score = None
-            for f, dfp in sorted(per_field.items()):
-                iv = idf_fn(self.n_docs, dfp)
-                if w is not None:
-                    iv = w[f] * iv
-                ad = self.field_avgdl.get(f, self.avgdl)
-                norm = (1.0 - b) + b * F.col("dl") / F.lit(ad) if ad > 0 \
-                    else F.lit(1.0 - b)
-                # same parenthesization as oracle: idf * (tf-part)
-                s_f = F.lit(iv) * (F.col("tf") * F.lit(k1 + 1.0) / (
-                    F.col("tf") + F.lit(k1) * norm))
-                s_f = F.when(F.col("field") == f, s_f)
-                score = s_f if score is None else F.coalesce(s_f, score)
-            # drop rows of weight-excluded fields BEFORE aggregating: the
-            # when/coalesce chain yields NULL for them, and groupBy.sum over
-            # an all-NULL group would emit (doc, NULL) rows — the local
-            # reader filters such rows first, and parity requires we match
-            agg = (matches.select("doc_id", score.alias("s"))
-                   .where(F.col("s").isNotNull())
-                   .groupBy("doc_id").agg(F.sum("s").alias("score")))
+            agg = agg.select("doc_id", F.col("s").alias("score"))
             if quantize:
                 qm = float(10 ** quantize)
                 agg = agg.select(
@@ -1380,14 +1250,10 @@ def _hit_frames(pdf: pd.DataFrame, codec: str, tombs) -> list[pd.DataFrame]:
     for (t, fid), g in pdf.groupby(["term", "field"]):
         d = _decode_with_positions(g, codec)
         docs, tfs, poss = d["docs"], d["tfs"], d["poss"]
-        if tombs is not None and docs.size:
-            j = np.searchsorted(tombs, docs)
-            hit = j < tombs.size
-            hit[hit] = tombs[j[hit]] == docs[hit]
-            if hit.any():
-                keep = ~hit
-                poss = poss[np.repeat(keep, tfs)]
-                docs, tfs = docs[keep], tfs[keep]
+        keep = not_in_sorted(docs, tombs)
+        if not keep.all():
+            poss = poss[np.repeat(keep, tfs)]
+            docs, tfs = docs[keep], tfs[keep]
         n = int(tfs.sum())
         outs.append(pd.DataFrame({
             "doc_id": np.repeat(docs, tfs),
@@ -1449,11 +1315,8 @@ def _matched_ids(pdf: pd.DataFrame, codec: str, tombs,
                 np.intersect1d(out, per_term[t], assume_unique=True)
     else:
         out = np.unique(np.concatenate(list(per_term.values())))
-    if tombs is not None and out.size:
-        j = np.searchsorted(tombs, out)
-        hit = j < tombs.size
-        hit[hit] = tombs[j[hit]] == out[hit]
-        out = out[~hit]
+    if tombs is not None:
+        out = out[not_in_sorted(out, tombs)]
     return out.astype(np.int64, copy=False)
 
 
@@ -1602,41 +1465,6 @@ def term_vectors(corpus: DataFrame, doc_ids: list[int] | None = None,
             .orderBy(id_col, "term"))
 
 
-def _phrase_count_cap(analyzer: str, phrase: str, prefix: bool, live: bool,
-                      max_expansions: int) -> int | None:
-    """Expansion cap for count_phrase, shared by BOTH readers: None (no
-    prefix expansion), the caller's cap, or 0 = UNCAPPED — a single-token
-    prefix count on a live (tombstoned) index must expand exhaustively so
-    the count stays exact (the clean-index path aggregates the terms table
-    instead and never expands)."""
-    cap = max_expansions if prefix else None
-    if prefix and live:
-        tok, _ = ANALYZERS[analyzer]
-        if len(tok(ascii_fold(phrase))) == 1:
-            cap = 0
-    return cap
-
-
-def _phrase_variants_for(analyzer: str, expand_fn, phrase: str,
-                         max_expansions: int | None = None) -> list[list[str]]:
-    """Token sequences to match: just the analyzed phrase
-    (``max_expansions=None``), or — prefix mode — one variant per dictionary
-    expansion of the LAST token (the reference's natural suffix semantics: a
-    query is a byte prefix of the suffix from a token start, so earlier
-    tokens are exact and the final token matches as a prefix —
-    ``README.markdown:7-11``). ``max_expansions=0`` expands UNCAPPED (exact
-    counts under pending tombstones). Shared by the distributed and local
-    readers (``expand_fn`` is each reader's dictionary range scan)."""
-    tok, _ = ANALYZERS[analyzer]
-    terms = [ascii_fold(t) for t in tok(ascii_fold(phrase))]
-    if not terms:
-        return []
-    if max_expansions is None:
-        return [terms]
-    cap = None if max_expansions == 0 else max_expansions
-    return [terms[:-1] + [e] for e in expand_fn(terms[-1], cap)]
-
-
 def _gather_doc_positions(data: dict, cand: np.ndarray,
                           shift: int) -> tuple[np.ndarray, np.ndarray]:
     """Concatenated ``(doc_rank << 32) | (pos + shift)`` keys for the cand
@@ -1685,6 +1513,37 @@ def _variant_matched_keys(data: dict, v: list[str],
     return matched
 
 
+def _rerank(keys: np.ndarray, cand: np.ndarray,
+            common: np.ndarray) -> np.ndarray:
+    """Composite keys ranked in ``common`` (a sorted subset of ``cand``)
+    re-ranked into ``cand``."""
+    remap = np.searchsorted(cand, common)
+    return (remap[keys >> np.int64(32)] << np.int64(32)) \
+        | (keys & np.int64(0xFFFFFFFF))
+
+
+def _span_rows(data: dict, v: list[str], cand: np.ndarray,
+               matched: np.ndarray) -> pd.DataFrame:
+    """(doc_id, tf, dl) of one variant's surviving span keys over
+    ``cand``: tf = spans per doc."""
+    uniq_ranks, tf = np.unique(matched >> np.int64(32), return_counts=True)
+    docs = cand[uniq_ranks]
+    idx0 = np.searchsorted(data[v[0]]["docs"], docs)
+    return pd.DataFrame({"doc_id": docs, "tf": tf.astype(np.int64),
+                         "dl": data[v[0]]["dls"][idx0].astype(np.int64)})
+
+
+def _sum_spans(frames: list[pd.DataFrame]) -> pd.DataFrame | None:
+    """(doc_id, tf, dl) with tf summed over variants (disjoint
+    occurrences — one term per position), sorted by doc_id."""
+    if not frames:
+        return None
+    return (pd.concat(frames, ignore_index=True)
+            .groupby("doc_id", as_index=False)
+            .agg(tf=("tf", "sum"), dl=("dl", "first"))
+            .sort_values("doc_id", kind="mergesort"))
+
+
 def _match_variant_rows(data: dict, v: list[str],
                         tombs: np.ndarray | None,
                         max_end: int | None = None,
@@ -1728,10 +1587,7 @@ def _match_variant_rows(data: dict, v: list[str],
             if common.size == 0:
                 continue
             keys, _ = _gather_doc_positions(data[t], common, 0)
-            # remap common-relative ranks into cand-relative ranks
-            remap = np.searchsorted(cand, common)
-            ex_keys.append((remap[keys >> np.int64(32)] << np.int64(32))
-                           | (keys & np.int64(0xFFFFFFFF)))
+            ex_keys.append(_rerank(keys, cand, common))
         if ex_keys:
             ex = np.sort(np.concatenate(ex_keys))
             ends = matched & np.int64(0xFFFFFFFF)
@@ -1743,13 +1599,19 @@ def _match_variant_rows(data: dict, v: list[str],
             matched = matched[~killed]
             if matched.size == 0:
                 return None
-    ranks = (matched >> np.int64(32))
-    uniq_ranks, tf = np.unique(ranks, return_counts=True)
-    docs = cand[uniq_ranks]
-    idx0 = np.searchsorted(data[v[0]]["docs"], docs)
-    dls = data[v[0]]["dls"][idx0]
-    return pd.DataFrame({"doc_id": docs, "tf": tf.astype(np.int64),
-                         "dl": dls.astype(np.int64)})
+    return _span_rows(data, v, cand, matched)
+
+
+def _term_keys(data: dict, terms: list[str],
+               tombs: np.ndarray | None) -> tuple[np.ndarray, dict] | None:
+    """(cand, term -> sorted composite ``(doc_rank << 32) | pos`` keys
+    over cand) for the live docs holding every distinct term of one
+    decoded bucket-field frame; None when there is none."""
+    cand = _variant_cand_docs(data, terms, tombs)
+    if cand is None:
+        return None
+    return cand, {t: _gather_doc_positions(data[t], cand, 0)[0]
+                  for t in sorted(set(terms))}
 
 
 def _near_match_docs(data: dict, terms: list[str], slop: int,
@@ -1759,39 +1621,10 @@ def _near_match_docs(data: dict, terms: list[str], slop: int,
     (max position - min position, unordered) — reference proximity over a
     suffix array, re-expressed over position lists.
 
-    Exact and fully vectorized: a qualifying window exists iff some
-    occurrence position p (of any term) has, for EVERY term t, an
-    occurrence at next_t(p) <= p + slop — the minimal covering window's
-    leftmost element witnesses it. Each next_t is one ``searchsorted``
-    over composite ``(doc_rank << 32) | pos`` keys, so the check is
-    O(occurrences x terms x log) with no per-doc Python loop."""
-    tu = sorted(set(terms))
-    cand = data[tu[0]]["docs"]
-    for t in tu[1:]:
-        cand = np.intersect1d(cand, data[t]["docs"], assume_unique=True)
-    if tombs is not None and cand.size:
-        cand = cand[~np.isin(cand, tombs)]
-    if cand.size == 0:
-        return cand.astype(np.int64, copy=False)
-    keys = {}
-    for t in tu:
-        kt, _ = _gather_doc_positions(data[t], cand, 0)
-        keys[t] = kt                      # rank asc, pos asc => sorted
-    starts = np.sort(np.concatenate(list(keys.values())))
-    ok = np.ones(starts.size, dtype=bool)
-    pos_mask = np.int64(0xFFFFFFFF)
-    for t in tu:
-        kt = keys[t]
-        idx = np.searchsorted(kt, starts)
-        nxt = kt[np.minimum(idx, kt.size - 1)] if kt.size else starts
-        in_doc = (idx < kt.size) & \
-            ((nxt >> np.int64(32)) == (starts >> np.int64(32)))
-        gap = (nxt & pos_mask) - (starts & pos_mask)
-        ok &= in_doc & (gap <= slop)
-    if not ok.any():
-        return np.zeros(0, dtype=np.int64)
-    ranks = np.unique(starts[ok] >> np.int64(32))
-    return cand[ranks].astype(np.int64, copy=False)
+    Exact and fully vectorized: a qualifying window exists iff the doc's
+    minimal covering span (``_min_spans``) is <= slop."""
+    ids, spans = _min_spans(data, terms, tombs)
+    return ids[spans <= slop]
 
 
 def _min_spans(data: dict, terms: list[str],
@@ -1801,27 +1634,19 @@ def _min_spans(data: dict, terms: list[str],
     covering all terms and starting at occurrence p has width
     ``max_t(next_t(p) - p)``; the doc's minimal span is the min over
     starts where every term has a next occurrence — the classic
-    minimal-window sweep, vectorized with the same composite-key
-    searchsorted as ``_near_match_docs``."""
-    tu = sorted(set(terms))
-    cand = data[tu[0]]["docs"]
-    for t in tu[1:]:
-        cand = np.intersect1d(cand, data[t]["docs"], assume_unique=True)
-    if tombs is not None and cand.size:
-        cand = cand[~np.isin(cand, tombs)]
+    minimal-window sweep, vectorized: each next_t is one ``searchsorted``
+    over composite ``(doc_rank << 32) | pos`` keys, so the sweep is
+    O(occurrences x terms x log) with no per-doc Python loop."""
     z = np.zeros(0, dtype=np.int64)
-    if cand.size == 0:
+    got = _term_keys(data, terms, tombs)
+    if got is None:
         return z, z
-    keys = {}
-    for t in tu:
-        kt, _ = _gather_doc_positions(data[t], cand, 0)
-        keys[t] = kt
+    cand, keys = got
     starts = np.sort(np.concatenate(list(keys.values())))
     ok = np.ones(starts.size, dtype=bool)
     span = np.zeros(starts.size, dtype=np.int64)
     pos_mask = np.int64(0xFFFFFFFF)
-    for t in tu:
-        kt = keys[t]
+    for kt in keys.values():
         idx = np.searchsorted(kt, starts)
         nxt = kt[np.minimum(idx, kt.size - 1)] if kt.size else starts
         in_doc = (idx < kt.size) & \
@@ -1852,18 +1677,10 @@ def _ordered_near_match_docs(data: dict, terms: list[str], slop: int,
     composite (doc_rank << 32) | pos keys). Earliest-next minimizes the
     chain end monotonically, so a doc matches under the greedy chain iff
     ANY valid ordered chain exists — the SQL EXISTS twin is equivalent."""
-    tu = sorted(set(terms))
-    cand = data[tu[0]]["docs"]
-    for t in tu[1:]:
-        cand = np.intersect1d(cand, data[t]["docs"], assume_unique=True)
-    if tombs is not None and cand.size:
-        cand = cand[~np.isin(cand, tombs)]
-    if cand.size == 0:
-        return cand.astype(np.int64, copy=False)
-    keys = {}
-    for t in tu:
-        kt, _ = _gather_doc_positions(data[t], cand, 0)
-        keys[t] = kt                      # rank asc, pos asc => sorted
+    got = _term_keys(data, terms, tombs)
+    if got is None:
+        return np.zeros(0, dtype=np.int64)
+    cand, keys = got
     pos_mask = np.int64(0xFFFFFFFF)
     starts = keys[terms[0]]
     ok = np.ones(starts.size, dtype=bool)
@@ -1891,8 +1708,8 @@ def _variants_match_rows(data: dict, variants: list[list[str]],
                          pre: int = 0, post: int = 0
                          ) -> pd.DataFrame | None:
     """(doc_id, tf, dl) of docs matching ANY variant, tf summed across
-    variants (disjoint occurrences — one term per position). Span
-    constraints pass through to ``_match_variant_rows``."""
+    variants (``_sum_spans``). Span constraints pass through to
+    ``_match_variant_rows``."""
     frames = []
     for v in variants:
         if any(t not in data for t in v):
@@ -1901,13 +1718,7 @@ def _variants_match_rows(data: dict, variants: list[list[str]],
                                 exclude=exclude, pre=pre, post=post)
         if m is not None:
             frames.append(m)
-    if not frames:
-        return None
-    out = (pd.concat(frames, ignore_index=True)
-           .groupby("doc_id", as_index=False)
-           .agg(tf=("tf", "sum"), dl=("dl", "first"))
-           .sort_values("doc_id", kind="mergesort"))
-    return out
+    return _sum_spans(frames)
 
 
 def _variants_enclosure_rows(data: dict, keeps: list[list[str]],
@@ -1956,11 +1767,7 @@ def _variants_enclosure_rows(data: dict, keeps: list[list[str]],
             keys = _variant_matched_keys(data, o, common)
             if keys is None:
                 continue
-            # remap common-relative ranks into cand-relative ranks
-            remap = np.searchsorted(cand, common)
-            by_len.setdefault(lo, []).append(
-                (remap[keys >> np.int64(32)] << np.int64(32))
-                | (keys & mask))
+            by_len.setdefault(lo, []).append(_rerank(keys, cand, common))
         ok = np.zeros(matched.size, dtype=bool)
         ends = matched & mask
         rank_hi = matched & ~mask
@@ -1973,21 +1780,9 @@ def _variants_enclosure_rows(data: dict, keeps: list[list[str]],
                 lo_k, hi_k = rank_hi | (ends + d), rank_hi | ends
             ok |= (np.searchsorted(ot, hi_k, side="right")
                    > np.searchsorted(ot, lo_k, side="left"))
-        if not ok.any():
-            continue
-        ranks = matched[ok] >> np.int64(32)
-        uniq_ranks, tf = np.unique(ranks, return_counts=True)
-        docs = cand[uniq_ranks]
-        idx0 = np.searchsorted(data[v[0]]["docs"], docs)
-        frames.append(pd.DataFrame({
-            "doc_id": docs, "tf": tf.astype(np.int64),
-            "dl": data[v[0]]["dls"][idx0].astype(np.int64)}))
-    if not frames:
-        return None
-    return (pd.concat(frames, ignore_index=True)
-            .groupby("doc_id", as_index=False)
-            .agg(tf=("tf", "sum"), dl=("dl", "first"))
-            .sort_values("doc_id", kind="mergesort"))
+        if ok.any():
+            frames.append(_span_rows(data, v, cand, matched[ok]))
+    return _sum_spans(frames)
 
 
 def _decode_with_positions(g: pd.DataFrame, codec: str = "varint") -> dict:

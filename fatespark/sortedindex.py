@@ -62,7 +62,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import BuildConfig, IndexBuilder
-from .codec import get_codec
+from .codec import get_codec, not_in_sorted
 from .query import SearchIndex, _fold_terms
 
 __all__ = ["rank_assign", "build_sorted", "search_sorted_early"]
@@ -176,11 +176,8 @@ def _prefix_match(pdf: pd.DataFrame, codec: str, tombs,
                 np.intersect1d(out, per_term[t], assume_unique=True)
     else:
         out = np.unique(np.concatenate(list(per_term.values())))
-    if tombs is not None and out.size:
-        j = np.searchsorted(tombs, out)
-        hit = j < tombs.size
-        hit[hit] = tombs[j[hit]] == out[hit]
-        out = out[~hit]
+    if tombs is not None:
+        out = out[not_in_sorted(out, tombs)]
     return out[:k].astype(np.int64, copy=False)
 
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .codec import get_codec
+from .codec import get_codec, not_in_sorted
 
 K1 = 1.2
 B = 0.75
@@ -290,12 +290,9 @@ class TermBlocks:
     def without_docs(self, drop_sorted: np.ndarray) -> "TermBlocks":
         """Copy of this stream with the (sorted int64) doc ids removed."""
         docs, tfs, dls = self.decode_all()
-        j = np.searchsorted(drop_sorted, docs)
-        hit = j < drop_sorted.size
-        hit[hit] = drop_sorted[j[hit]] == docs[hit]
-        if not hit.any():
+        keep = not_in_sorted(docs, drop_sorted)
+        if keep.all():
             return self
-        keep = ~hit
         return TermBlocks.from_arrays(self.idf, docs[keep], tfs[keep],
                                       dls[keep], avgdl=self.avgdl,
                                       sim=self.sim)
@@ -305,9 +302,7 @@ class TermBlocks:
         the positive twin of ``without_docs``, used by proximity search to
         score only window-matching documents."""
         docs, tfs, dls = self.decode_all()
-        j = np.searchsorted(keep_sorted, docs)
-        hit = j < keep_sorted.size
-        hit[hit] = keep_sorted[j[hit]] == docs[hit]
+        hit = ~not_in_sorted(docs, keep_sorted)
         if hit.all():
             return self
         return TermBlocks.from_arrays(self.idf, docs[hit], tfs[hit],
@@ -666,9 +661,7 @@ def _lookup_in_blocks(t: TermBlocks, cand: np.ndarray):
         z = np.zeros(0, dtype=np.int64)
         return z, z, z
     docs, tfs, dls = t.decode_blocks(bsel)
-    j = np.searchsorted(cand, docs)
-    hit = j < cand.size
-    hit[hit] = cand[j[hit]] == docs[hit]
+    hit = ~not_in_sorted(docs, cand)
     return docs[hit], tfs[hit], dls[hit]
 
 

@@ -257,6 +257,21 @@ CHUNKED_CASES = {
     "wand_exclude_filter": lambda ix: ix.search(
         ["the", "smith", "big"], k=10, mode="OR", use_wand=True,
         exclude="array", filter_terms=["ru", "de"], filter_field=1),
+    # every positional query family, and the phrase scorer's options
+    "span_first": lambda ix: ix.search_span_first("the big", 30, k=10),
+    "span_not": lambda ix: ix.search_span_not("the big", "of", k=10,
+                                              pre=2, post=1),
+    "span_containing": lambda ix: ix.search_span_containing(
+        ["the big", "smith the"], "the", k=10),
+    "phrase_prefix": lambda ix: ix.search_phrase_prefix("the bi", k=10),
+    "phrases_any": lambda ix: ix.search_phrases_any(
+        ["the big", "smith the"], k=10),
+    "phrase_weights": lambda ix: ix.search_phrase("the big", k=10,
+                                                  weights=[1.0, 0.0]),
+    "phrase_quantize": lambda ix: ix.search_phrase("the big", k=10,
+                                                   quantize=1),
+    "phrase_offset": lambda ix: ix.search_phrase("the big", k=10,
+                                                 offset=2),
 }
 
 
@@ -268,6 +283,17 @@ def test_chunked_tombstoned_parity(chunked_idx, case):
     assert a, "fixture must produce matches"
     assert a == b
     assert not set(victims) & {d for d, _ in b}
+
+
+@pytest.mark.parametrize("phrase,prefix", [
+    ("the big", False), ("the bi", True), ("arr", True)])
+def test_chunked_count_phrase_parity(chunked_idx, phrase, prefix):
+    """Pending deletes send every count through the span matcher, the
+    single-token prefix one with an uncapped expansion."""
+    dist, loc, _ = chunked_idx
+    n = dist.count_phrase(phrase, prefix=prefix)
+    assert n > 0
+    assert loc.count_phrase(phrase, prefix=prefix) == n
 
 
 def test_chunked_tombstoned_search_after(chunked_idx):
@@ -294,6 +320,12 @@ BAD_INPUT = {
                                              offset=-1),
     "many": lambda ix: ix.search_many({"q": ["the", "big"]}, k=5,
                                       mode="XOR"),
+    # nothing matches: the window is still checked
+    "phrase_nomatch": lambda ix: ix.search_phrase("zzznope", k=-1),
+    "span_nomatch": lambda ix: ix.search_span_first("zzznope big", 5,
+                                                    offset=-1),
+    "enclosure_nomatch": lambda ix: ix.search_span_within(
+        "array", "zzznope", k=-1),
 }
 
 
