@@ -493,14 +493,14 @@ def plan_phrase_count(ix, phrase: str, prefix: bool,
     exact."""
     live = ix.tombstones is not None
     tok, _ = ANALYZERS[ix.analyzer]
+    toks = [ascii_fold(t) for t in tok(ascii_fold(phrase))]
     cap = max_expansions if prefix else None
-    if prefix and live and len(tok(ascii_fold(phrase))) == 1:
+    if prefix and live and len(toks) == 1:
         cap = 0
     variants = _phrase_variants(ix, phrase, cap)
     if variants and all(len(v) == 1 for v in variants) and not live:
         if prefix:
-            return ix.count_prefix(
-                [ascii_fold(t) for t in tok(ascii_fold(phrase))][-1])
+            return ix.count_prefix(toks[-1])
         st = ix.term_stats([v[0] for v in variants])
         return sum(f["cf"] for d in st.values() for f in d.values())
     plan = plan_spans(ix, variants)
