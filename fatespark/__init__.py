@@ -4,7 +4,7 @@ A from-scratch re-expression of the capabilities of jeffrafter/fates (a
 pure-Ruby suffix-array full-text library) as an idiomatic Spark engine:
 vectorized pandas-UDF tokenization, per-partition compressed posting segments,
 salted skew-aware merge into a doc-bucketed parquet/Iceberg index, and BM25
-top-k querying with posting intersection and block-max WAND pruning.
+top-k querying with posting intersection and vectorized exhaustive scoring.
 """
 
 __version__ = "0.1.0"

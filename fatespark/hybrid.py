@@ -12,7 +12,7 @@ and a document's fused score is
 value every production engine ships). Missing-from-an-arm contributes 0.
 
 Scale shape: fusion itself is O(sum of arm sizes) — the arms are the
-scalable parts (block-max WAND for text, partition-pruned LSH/IVF probes
+scalable parts (bucket-parallel BM25 for text, partition-pruned LSH/IVF probes
 for vectors), each already k-bounded before fusion, so the full-outer
 join here runs over at most ``n_arms * N`` rows regardless of corpus
 size. The rank window is over an already-``limit(N)``-ed list (single
@@ -92,7 +92,7 @@ def hybrid_rrf(index, emb_df: DataFrame, query, query_vec,
 
     ``index`` is a ``SearchIndex`` whose doc_ids coincide with
     ``emb_df[vec_id_col]``. Arm 1 is the fulltext top-``n_candidates``
-    (WAND-prunable); arm 2 is cosine top-``n_candidates`` against
+    (bucket-parallel BM25); arm 2 is cosine top-``n_candidates`` against
     ``query_vec``. Both arms rank by their ``quantize``-decimal
     floor/round-quantized score with id ASC tie-break, so ranks are
     cross-engine stable (the same contract the ft_*/ann_* driver rows

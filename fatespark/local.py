@@ -47,8 +47,8 @@ no row-group scan, no filter, no query-time re-block. Run
 ``IndexBuilder.compact_local(spark)`` once after a build to write the copy;
 without a copy for the snapshot being read (never compacted, a stale copy,
 a pinned ``snapshot_id``/``as_of``), the reader builds the same layout in
-memory at open. Tombstones apply at query time. ``use_wand=True`` uses the
-same interval-at-a-time block-vectorized BMW kernel as the distributed
+memory at open. Tombstones apply at query time. Every OR query runs the
+exhaustive kernel, whatever ``use_wand`` says, as in the distributed
 scorer."""
 
 from __future__ import annotations
@@ -65,9 +65,13 @@ import pandas as pd
 from . import serving
 from .analysis import ANALYZERS, ascii_fold
 from .oracle import idf as idf_fn
-from .wand import (TermBlocks, score_and, score_bmw_or, score_dismax,
-                   score_exhaustive_or, score_maxscore_or, score_or_msm,
-                   score_or_must)
+from .wand import (TermBlocks, score_and, score_dismax, score_exhaustive_or,
+                   score_or_msm, score_or_must)
+
+# The pruned OR kernels' names, kept for perfbench/run.py's --trace 1,
+# which wraps them (and TermBlocks.decode_blocks) by name: they go together
+# with _RGIndex.read_range in the next benchmark change.
+score_bmw_or = score_maxscore_or = score_exhaustive_or
 
 SIMILARITIES = ("bm25", "classic", "lmd", "lmjm", "bm25plus")
 
@@ -92,10 +96,9 @@ def _term_blocks_from_pdf(g, idf: float, avgdl: float = 0.0,
                           sim: tuple | None = None) -> TermBlocks:
     """One stream's ``TermBlocks`` from its block rows: a pandas frame, or
     any mapping of block columns to arrays (``serving.Rows``)."""
-    return TermBlocks(
-        idf, g["first_doc"], g["last_doc"], g["n"], g["max_tf"],
-        g["min_dl"], list(g["docs"]), list(g["tfs"]), list(g["dls"]),
-        avgdl=avgdl, codec=codec, sim=sim)
+    return TermBlocks(idf, g["first_doc"], g["n"], list(g["docs"]),
+                      list(g["tfs"]), list(g["dls"]), avgdl=avgdl,
+                      codec=codec, sim=sim)
 
 
 # -- query plan and executor, shared by both readers ------------------------
@@ -118,7 +121,6 @@ class Plan(NamedTuple):
     codec: str
     mode: str
     k: int                  # hits each kernel call returns: k + offset
-    use_wand: bool | str
     qmul: float | None      # quantize multiplier
     after: tuple | None     # search_after cursor (score, doc_id)
     msm: int | None
@@ -167,7 +169,11 @@ def plan_search(ix, query: str | list[str], k: int = 10, mode: str = "AND",
     dictionary-resolved terms and returns ``(n_docs, avgdl, field_avgdl,
     {(term, field): df})``, which replace the reader's own statistics: the
     filtered-subset rebase (``SearchIndex._rebase_stats``) or federated
-    global statistics. Streams whose df is 0 there are dropped."""
+    global statistics. Streams whose df is 0 there are dropped.
+
+    ``use_wand`` selects no kernel: every plain OR plan runs the exhaustive
+    one. It is still checked against the options it never combined with
+    (``min_should_match``, ``combine``, ``must_terms``)."""
     check_page(k, offset, mode)
     if search_after is not None and offset:
         raise ValueError("search_after and offset are mutually "
@@ -181,8 +187,8 @@ def plan_search(ix, query: str | list[str], k: int = 10, mode: str = "AND",
         if mode != "OR":
             raise ValueError("min_should_match requires mode='OR'")
         if use_wand:
-            raise ValueError("min_should_match is exhaustive-only "
-                             "(WAND bounds ignore the match floor)")
+            raise ValueError("min_should_match does not combine with "
+                             "use_wand")
     if combine not in ("sum", "dismax", "cross_fields"):
         raise ValueError("combine must be sum|dismax|cross_fields")
     dismax_tie = None
@@ -287,7 +293,7 @@ def plan_search(ix, query: str | list[str], k: int = 10, mode: str = "AND",
         exclude=frozenset(t for t in xterms if t in stats),
         filter=frozenset(fpresent), filter_field=filter_field,
         idfs=idfs, sims=sims, avgdl=avgdl, field_avgdl=favg,
-        codec=ix.codec_name, mode=mode, k=k + offset, use_wand=use_wand,
+        codec=ix.codec_name, mode=mode, k=k + offset,
         qmul=float(10 ** quantize) if quantize else None,
         after=None if search_after is None
         else (float(search_after[0]), int(search_after[1])),
@@ -359,10 +365,8 @@ def score_streams(by_tf: dict, plan: Plan,
     avgdl, qmul, after = plan.avgdl, plan.qmul, plan.after
     if plan.mode == "OR" and not plan.must and plan.msm is None \
             and plan.dismax_tie is None:
-        kernel = (score_maxscore_or if plan.use_wand == "maxscore"
-                  else score_bmw_or if plan.use_wand else score_exhaustive_or)
-        return kernel([by_tf[kk] for kk in keys], avgdl, k, qmul,
-                      after=after)
+        return score_exhaustive_or([by_tf[kk] for kk in keys], avgdl, k,
+                                   qmul, after=after)
     groups = [[by_tf[kk] for kk in keys if kk[0] == t] for t in terms]
     if plan.mode == "AND":
         return score_and(groups, avgdl, k, qmul, after=after)
@@ -853,11 +857,13 @@ class LocalSearchIndex:
                                self.tombstones, p.k)
         out = pd.DataFrame({"doc_id": docs[offset:],
                             "score": scores[offset:]})
-        if with_url:
-            u = self.urls_of([int(d) for d in out["doc_id"]])
-            out = out.assign(url=np.array(
-                [u.get(int(d)) for d in out["doc_id"]], dtype=object))
-        return out
+        return self._join_url(out) if with_url else out
+
+    def _join_url(self, out: pd.DataFrame) -> pd.DataFrame:
+        """``out`` with each hit's url from the docs table."""
+        u = self.urls_of([int(d) for d in out["doc_id"]])
+        return out.assign(url=np.array(
+            [u.get(int(d)) for d in out["doc_id"]], dtype=object))
 
     def count_prefix(self, prefix: str) -> int:
         """Exact, uncapped occurrence count of tokens starting with
@@ -877,12 +883,13 @@ class LocalSearchIndex:
                            plan, self.tombstones)
 
     def _ranked_spans(self, plan: SpanPlan | None, k: int, offset: int,
-                      quantize: int | None,
+                      with_url: bool, quantize: int | None,
                       weights: list[float] | None) -> pd.DataFrame:
         if plan is None:
-            return _empty_result()
-        return self._score_phrase_rows(self._span_matches(plan), k, offset,
-                                       quantize, weights)
+            return _empty_result(with_url)
+        out = self._score_phrase_rows(self._span_matches(plan), k, offset,
+                                      quantize, weights)
+        return self._join_url(out) if with_url else out
 
     def count_phrase(self, phrase: str, prefix: bool = False,
                      max_expansions: int = 256) -> int:
@@ -894,7 +901,7 @@ class LocalSearchIndex:
         return int(self._span_matches(p)["tf"].sum())
 
     def search_phrase(self, phrase: str, k: int = 10, offset: int = 0,
-                      quantize: int | None = None,
+                      with_url: bool = False, quantize: int | None = None,
                       weights: list[float] | None = None) -> pd.DataFrame:
         """Consecutive-token phrase over positions — identical semantics to
         ``SearchIndex.search_phrase`` (phrase scored as a pseudo-term with
@@ -902,67 +909,81 @@ class LocalSearchIndex:
         from the serving copy's row slices."""
         p = plan_spans(self, _phrase_variants(self, phrase), k=k,
                        offset=offset)
-        return self._ranked_spans(p, k, offset, quantize, weights)
+        return self._ranked_spans(p, k, offset, with_url, quantize,
+                                  weights)
 
     def search_phrase_prefix(self, phrase: str, k: int = 10, offset: int = 0,
                              max_expansions: int = 16,
+                             with_url: bool = False,
                              quantize: int | None = None,
                              weights: list[float] | None = None
                              ) -> pd.DataFrame:
         """``SearchIndex.search_phrase_prefix`` (shared ``plan_spans``)."""
         p = plan_spans(self, _phrase_variants(self, phrase, max_expansions),
                        k=k, offset=offset)
-        return self._ranked_spans(p, k, offset, quantize, weights)
+        return self._ranked_spans(p, k, offset, with_url, quantize,
+                                  weights)
 
     def search_phrases_any(self, phrases: list[str], k: int = 10,
-                           offset: int = 0, quantize: int | None = None,
+                           offset: int = 0, with_url: bool = False,
+                           quantize: int | None = None,
                            weights: list[float] | None = None
                            ) -> pd.DataFrame:
         """``SearchIndex.search_phrases_any`` (shared ``plan_spans``)."""
         p = plan_spans(self, _spanor_variants(self, phrases), k=k,
                        offset=offset)
-        return self._ranked_spans(p, k, offset, quantize, weights)
+        return self._ranked_spans(p, k, offset, with_url, quantize,
+                                  weights)
 
     def search_span_first(self, phrase: str, max_end: int, k: int = 10,
-                          offset: int = 0, quantize: int | None = None,
+                          offset: int = 0, with_url: bool = False,
+                          quantize: int | None = None,
                           weights: list[float] | None = None
                           ) -> pd.DataFrame:
         """``SearchIndex.search_span_first`` (shared ``plan_spans``)."""
         p = plan_spans(self, _phrase_variants(self, phrase), k=k,
                        offset=offset, max_end=max_end)
-        return self._ranked_spans(p, k, offset, quantize, weights)
+        return self._ranked_spans(p, k, offset, with_url, quantize,
+                                  weights)
 
     def search_span_not(self, phrase: str, exclude: str | list[str],
                         k: int = 10, pre: int = 0, post: int = 0,
-                        offset: int = 0, quantize: int | None = None,
+                        offset: int = 0, with_url: bool = False,
+                        quantize: int | None = None,
                         weights: list[float] | None = None) -> pd.DataFrame:
         """``SearchIndex.search_span_not`` (shared ``plan_spans``)."""
         p = plan_spans(self, _phrase_variants(self, phrase), k=k,
                        offset=offset, exclude=exclude, pre=pre, post=post)
-        return self._ranked_spans(p, k, offset, quantize, weights)
+        return self._ranked_spans(p, k, offset, with_url, quantize,
+                                  weights)
 
     def search_span_within(self, little, big, k: int = 10,
-                           offset: int = 0, quantize: int | None = None,
+                           offset: int = 0, with_url: bool = False,
+                           quantize: int | None = None,
                            weights: list[float] | None = None
                            ) -> pd.DataFrame:
         """``SearchIndex.search_span_within`` (shared ``plan_spans``)."""
         p = plan_spans(self, _spanor_variants(self, little),
                        _spanor_variants(self, big), "within", k=k,
                        offset=offset)
-        return self._ranked_spans(p, k, offset, quantize, weights)
+        return self._ranked_spans(p, k, offset, with_url, quantize,
+                                  weights)
 
     def search_span_containing(self, big, little, k: int = 10,
-                               offset: int = 0, quantize: int | None = None,
+                               offset: int = 0, with_url: bool = False,
+                               quantize: int | None = None,
                                weights: list[float] | None = None
                                ) -> pd.DataFrame:
         """``SearchIndex.search_span_containing`` (shared ``plan_spans``)."""
         p = plan_spans(self, _spanor_variants(self, big),
                        _spanor_variants(self, little), "containing", k=k,
                        offset=offset)
-        return self._ranked_spans(p, k, offset, quantize, weights)
+        return self._ranked_spans(p, k, offset, with_url, quantize,
+                                  weights)
 
     def search_near(self, query: str | list[str], slop: int, k: int = 10,
-                    offset: int = 0, quantize: int | None = None,
+                    offset: int = 0, with_url: bool = False,
+                    quantize: int | None = None,
                     weights: list[float] | None = None) -> pd.DataFrame:
         """Proximity (SLOP) search — ``SearchIndex.search_near``: the
         shared window test (``near_docs``) over all buckets' positions,
@@ -972,16 +993,17 @@ class LocalSearchIndex:
         p = plan_search(self, query, k=k, mode="AND", offset=offset,
                         quantize=quantize, weights=weights)
         if p is None:
-            return _empty_result()
+            return _empty_result(with_url)
         streams = self._post.streams(p.terms)
         keep = near_docs(positions(streams, self.codec_name), p.terms,
                          int(slop), self.tombstones)
         if keep is None:
-            return _empty_result()
+            return _empty_result(with_url)
         # window matches are live docs already: no tombstone pass
         docs, scores = execute(streams, p, None, p.k, keep=keep)
-        return pd.DataFrame({"doc_id": docs[offset:],
-                             "score": scores[offset:]})
+        out = pd.DataFrame({"doc_id": docs[offset:],
+                            "score": scores[offset:]})
+        return self._join_url(out) if with_url else out
 
     def _score_phrase_rows(self, m: pd.DataFrame, k: int, offset: int,
                            quantize: int | None = None,
@@ -1030,12 +1052,14 @@ class LocalSearchIndex:
         return terms if max_terms is None else terms[:max_terms]
 
     def search_prefix(self, prefix: str, k: int = 10, max_terms: int = 256,
+                      with_url: bool = False,
                       quantize: int | None = None) -> pd.DataFrame:
         check_page(k)
         terms = self.expand_prefix(prefix, max_terms)
         if not terms:
-            return _empty_result()
-        return self.search(terms, k=k, mode="OR", quantize=quantize)
+            return _empty_result(with_url)
+        return self.search(terms, k=k, mode="OR", with_url=with_url,
+                           quantize=quantize)
 
     def expand_fuzzy(self, term: str, max_edit: int = 1,
                      max_terms: int = 256) -> list[str]:

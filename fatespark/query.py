@@ -4,8 +4,7 @@ Query lifecycle (SURVEY §3.2 target shape): fold query terms → broadcast-size
 lookup of term stats (df → idf) from the tiny ``terms`` table (predicate
 pushdown onto term-sorted parquet) → filtered scan of posting blocks
 (``term IN (...)`` reaches the parquet row-group stats) → per-bucket scorer
-(``applyInPandas``: decode, intersect/merge, BM25, block-max WAND, local
-top-k) → global ``orderBy(score DESC, doc_id ASC).limit(k)`` (Catalyst
+(``applyInPandas``: decode, intersect/merge, BM25, local top-k) → global ``orderBy(score DESC, doc_id ASC).limit(k)`` (Catalyst
 ``TakeOrderedAndProject``) → optional doc-metadata join.
 
 The index is document-partitioned (bucket = hash(doc_id)), so every bucket
@@ -39,6 +38,9 @@ from .wand import B, K1
 
 RESULT_SCHEMA = "doc_id long, score double"
 SPAN_SCHEMA = "doc_id long, field int, tf int, dl int"  # local.match_spans
+# the block columns a scorer's TermBlocks read (local._term_blocks_from_pdf)
+SCORE_COLS = ["bucket", "term", "field", "n", "first_doc", "docs", "tfs",
+              "dls"]
 
 # tombstone sets up to this size ship inline in task closures (fast, no
 # broadcast round-trip); larger sets go through a Spark broadcast variable
@@ -361,19 +363,18 @@ class SearchIndex:
         O(offset + k) per bucket and per page — a cursor page is O(k)
         regardless of depth, which is the only pagination that survives
         deep scrolls at 10^12 docs. The eligibility mask is applied
-        INSIDE the per-bucket kernels before top-k selection (and before
-        WAND threshold-setting, so pruning stays exact); page p+1 passes
+        INSIDE the per-bucket kernels before top-k selection; page p+1 passes
         the LAST hit of page p as ``search_after=(score, doc_id)`` —
         sort-key order, like Elasticsearch sort values. Mutually exclusive with
         ``offset``. With ``quantize``, the cursor compares against the
         quantized scores the previous page returned.
 
-        ``use_wand`` selects the OR-mode pruning kernel: ``True`` is
-        interval-at-a-time Block-Max WAND (``wand.score_bmw_or``),
-        ``"maxscore"`` is the Turtle & Flood MaxScore candidate pruner
-        (``wand.score_maxscore_or``) — both return the exhaustive
-        kernel's exact (doc, score) top-k, bit-identical; they differ
-        only in which postings they avoid decoding.
+        ``use_wand`` (``False``, ``True`` or ``"maxscore"``) selects
+        nothing: every OR query runs the exhaustive kernel
+        (``wand.score_exhaustive_or``). The pruning kernels it once chose
+        returned the same top-k, bit for bit, and were slower at the sizes
+        measured. It still raises with ``min_should_match``, ``combine``
+        or ``must_terms``.
 
         ``boosts`` multiplies a term's score contribution (Lucene
         ``term^2`` semantics): the per-stream scalar becomes
@@ -419,8 +420,7 @@ class SearchIndex:
         idf_c = 1 + ln(N/(df+1))), or ``"lmd"`` (LM Dirichlet, Zhai &
         Lafferty 2004: ln(1 + tf/(mu*p(w|C))) + ln(mu/(dl+mu)) with
         p(w|C) = cf/total_field_tokens, per-contribution clamped at 0 —
-        Lucene's non-negative-scores contract, which also keeps block-max
-        WAND bounds sound, so ``use_wand`` works under every model).
+        Lucene's non-negative-scores contract).
         ``mu`` is the Dirichlet prior (lmd only); ``"lmjm"`` is LM
         Jelinek-Mercer (Zhai & Lafferty 2001: ln(1 + ((1-lambda) *
         tf/dl) / (lambda * p(w|C))), always positive) with mixing
@@ -442,8 +442,7 @@ class SearchIndex:
         to the plain OR path (ranks back-fill bucket-locally — buckets
         are doc-disjoint, so the floor composes with sharding exactly).
         ``m <= 1`` is plain OR; ``m == len(terms)`` selects the AND doc
-        set. Not combinable with ``use_wand`` (block-max bounds don't
-        model the match-count floor; the exhaustive msm kernel is used).
+        set. Not combinable with ``use_wand``.
 
         ``combine="dismax"`` switches multi-field term combination from
         the BM25F field-sum (default, ``"sum"``) to Lucene
@@ -536,8 +535,7 @@ class SearchIndex:
             return pd.concat(frames, ignore_index=True)
 
         blocks = self.postings.filter(F.col("term").isin(scan.terms)).select(
-            "bucket", "term", "field", "n", "first_doc", "last_doc",
-            "max_tf", "min_dl", "docs", "tfs", "dls")
+            *SCORE_COLS)
         scored = blocks.groupBy("bucket").applyInPandas(scorer, out_schema)
         wspec = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                        F.asc("doc_id"))
@@ -589,9 +587,7 @@ class SearchIndex:
 
         scan_terms = sorted(qset | fset)
         blocks = self.postings.filter(
-            F.col("term").isin(scan_terms)).select(
-            "bucket", "term", "field", "n", "first_doc", "last_doc",
-            "max_tf", "min_dl", "docs", "tfs", "dls")
+            F.col("term").isin(scan_terms)).select(*SCORE_COLS)
         df_rows = (blocks.groupBy("bucket").applyInPandas(statser,
                                                           out_schema)
                    .groupBy("term", "field")
@@ -653,9 +649,7 @@ class SearchIndex:
         # column-prune before the Arrow hop: the scorer never reads positions
         # (poss is the largest column in the index)
         blocks = self.postings.filter(
-            F.col("term").isin(plan.scan_terms())).select(
-            "bucket", "term", "field", "n", "first_doc", "last_doc", "max_tf",
-            "min_dl", "docs", "tfs", "dls")
+            F.col("term").isin(plan.scan_terms())).select(*SCORE_COLS)
         return blocks.groupBy("bucket").applyInPandas(scorer, RESULT_SCHEMA)
 
     # -- phrase and span: local.plan_spans -> _span_matches -> score ---------
@@ -707,7 +701,7 @@ class SearchIndex:
                       with_url: bool, quantize: int | None,
                       weights: list[float] | None) -> DataFrame:
         if plan is None:
-            return self._empty()
+            return self._empty(with_url)
         return self._score_phrase_matches(self._span_matches(plan), k, offset,
                                           with_url, quantize, weights)
 
@@ -830,7 +824,7 @@ class SearchIndex:
                             else None)
         arms = [(i, c) for i, c in enumerate(contribs) if c is not None]
         if not arms:
-            return self._empty()
+            return self._empty(with_url)
         tagged = None
         for i, c in arms:
             t = c.select("doc_id", F.lit(i).alias("p"), "s")
@@ -975,7 +969,7 @@ class SearchIndex:
         p = plan_search(self, query, k=k, mode="AND", offset=offset,
                         quantize=quantize, weights=weights)
         if p is None:
-            return self._empty()
+            return self._empty(with_url)
         tombs_ref, codec, sl = self._tombs_ref(), self.codec_name, int(slop)
 
         def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -989,8 +983,7 @@ class SearchIndex:
             return pd.DataFrame({"doc_id": docs, "score": scores})
 
         blocks = self.postings.filter(F.col("term").isin(p.terms)).select(
-            "bucket", "term", "field", "n", "first_doc", "last_doc",
-            "max_tf", "min_dl", "docs", "tfs", "dls", "poss")
+            *SCORE_COLS, "poss")
         scored = blocks.groupBy("bucket").applyInPandas(scorer, RESULT_SCHEMA)
         out = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(p.k)
         if offset:
@@ -1023,7 +1016,7 @@ class SearchIndex:
         # the conjunctive kernel
         p = plan_search(self, query, k=k, mode="AND")
         if p is None:
-            return self._empty()
+            return self._empty(with_url)
         tombs_ref, codec = self._tombs_ref(), self.codec_name
         qmul = float(10 ** quantize) if quantize else None
         cc, nm1 = float(c), float(len(p.terms) - 1)
@@ -1061,8 +1054,7 @@ class SearchIndex:
             return pd.DataFrame({"doc_id": docs, "score": boosted})
 
         blocks = self.postings.filter(F.col("term").isin(p.terms)).select(
-            "bucket", "term", "field", "n", "first_doc", "last_doc",
-            "max_tf", "min_dl", "docs", "tfs", "dls", "poss")
+            *SCORE_COLS, "poss")
         scored = blocks.groupBy("bucket").applyInPandas(scorer,
                                                         RESULT_SCHEMA)
         out = (scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
@@ -1099,7 +1091,7 @@ class SearchIndex:
         try:
             agg = self._phrase_sums(matches, weights)
             if agg is None:
-                return self._empty()
+                return self._empty(with_url)
             agg = agg.select("doc_id", F.col("s").alias("score"))
             if quantize:
                 qm = float(10 ** quantize)
@@ -1137,7 +1129,7 @@ class SearchIndex:
         check_page(k)
         terms = self.expand_prefix(prefix, max_terms)
         if not terms:
-            return self._empty()
+            return self._empty(with_url)
         return self.search(terms, k=k, mode="OR", with_url=with_url,
                            quantize=quantize)
 

@@ -71,8 +71,8 @@ def serving_runs(batches: Iterator[pd.DataFrame],
     """Posting-block batches sorted by ``IN_SORT`` -> serving-copy blocks
     (``SERVING_COLS``): each (term, field) stream merged across buckets
     and chunks into doc order and re-blocked at ``SERVE_BLOCK``. A doc id
-    present in two chunks keeps both postings, as the query-time re-block
-    (``TermBlocks._reblock``) does."""
+    present in two chunks keeps both postings, as ``TermBlocks.decode_all``
+    does when it sorts a stream read from ``postings/``."""
     runs = (pdf.assign(bucket=0, salt=0) for pdf in batches)
     for out in merge_runs(runs, ["term", "field"], SERVE_BLOCK, "keep",
                           None, codec, codec):
@@ -158,15 +158,14 @@ def key_range(sorted_keys: np.ndarray, key: str) -> range:
 
 class Streams:
     """Row range of every (term, field) stream in a serving table, found
-    once from its sorted ``term`` column, plus the integer block columns as
-    arrays; the binary columns stay in the (memory-mapped) table until a
-    query slices them."""
+    once from its sorted ``term`` column, plus the integer block columns a
+    query reads as arrays; the binary columns stay in the (memory-mapped)
+    table until a query slices them."""
 
     def __init__(self, table):
         self.table = table
         self.ints = {c: np.asarray(table.column(c), dtype=np.int64)
-                     for c in ("n", "first_doc", "last_doc", "max_tf",
-                               "min_dl")}
+                     for c in ("n", "first_doc")}
         term = table.column("term").to_numpy()
         field = np.asarray(table.column("field"), dtype=np.int64)
         new = np.ones(term.size, dtype=bool)

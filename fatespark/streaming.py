@@ -11,7 +11,7 @@ previous published snapshot (meta is the publish marker), which mirrors the
 reference's readers only seeing ``finish!``-renamed fragments.
 
 Query-side nothing changes: cross-chunk block interleave is already handled
-(TermBlocks re-blocks on load).
+(``TermBlocks.decode_all`` sorts a stream whose chunks interleave).
 """
 
 from __future__ import annotations

@@ -127,6 +127,24 @@ def test_with_url_matches(pages_idx, contacts_idx):
         b = loc.search(terms, k=5, mode="AND", with_url=True)
         assert a.columns == list(b.columns) == ["doc_id", "score", "url"]
         assert a.count() == len(b) == 0, terms
+    # zero-hit positional and prefix queries: an absent term (no plan), a
+    # window no two distinct terms fit (slop 0), weights that score no field
+    dist, loc = pages_idx
+    no_hits = [
+        lambda ix: ix.search_phrase("zzznope", with_url=True),
+        lambda ix: ix.search_phrase("the", weights=[0.0], with_url=True),
+        lambda ix: ix.search_span_first("zzznope big", 5, with_url=True),
+        lambda ix: ix.search_span_within("array", "zzznope", with_url=True),
+        lambda ix: ix.search_near(["zzznope", "the"], 2, with_url=True),
+        lambda ix: ix.search_near(["the", "smith"], 0, with_url=True),
+        lambda ix: ix.search_prefix("zzznope", with_url=True),
+    ]
+    for i, q in enumerate(no_hits):
+        a, b = q(dist), q(loc)
+        assert a.columns == list(b.columns) == ["doc_id", "score", "url"], i
+        assert a.count() == len(b) == 0, i
+    a = dist.search_proximity_boost(["zzznope", "the"], with_url=True)
+    assert a.columns == ["doc_id", "score", "url"] and a.count() == 0
 
 
 def test_index_stats_diagnostics(pages_idx, tmp_root):
@@ -162,14 +180,15 @@ def test_matching_docs_matches_distributed(pages_idx):
 
 @pytest.mark.parametrize("mode,wand,kernel", [
     ("OR", False, "score_exhaustive_or"),
-    ("OR", True, "score_bmw_or"),
-    ("OR", "maxscore", "score_maxscore_or"),
+    ("OR", True, "score_exhaustive_or"),
+    ("OR", "maxscore", "score_exhaustive_or"),
     ("AND", False, "score_and"),
 ])
 def test_one_kernel_call_per_query(pages_idx, monkeypatch, mode, wand,
                                    kernel):
     """A local query is one pass over all buckets: its multi-bucket index
-    still costs exactly one scoring-kernel call."""
+    still costs exactly one scoring-kernel call, and every ``use_wand``
+    value runs the exhaustive OR kernel."""
     import fatespark.local as local
     _, loc = pages_idx
     calls = []
@@ -308,6 +327,46 @@ def test_chunked_tombstoned_search_after(chunked_idx):
         cursor = (a[-1][1], a[-1][0])
 
 
+@pytest.fixture(scope="module")
+def dup_chunk_idx(spark, tmp_root):
+    """One doc id (7) in two build chunks with the same text, so each of
+    its streams holds two postings for it, and a control doc (8) with that
+    text once; uncompacted and compacted local readers."""
+    import shutil
+    from pyspark.sql import functions as F
+    dup = "zebra zebra quokka alpha beta"
+    rows = [(7, dup, 0), (7, dup, 1), (8, dup, 0)]
+    words = ["alpha", "beta", "gamma", "delta", "zebra", "quokka"]
+    rows += [(100 + i, " ".join(words[(i * 5 + j) % 6]
+                                for j in range(3 + i % 4)), i % 2)
+             for i in range(40)]
+    df = spark.createDataFrame(rows, "id long, text string, c int")
+    d = str(tmp_root / "local_dup_chunk_idx")
+    IndexBuilder(d, BuildConfig(n_buckets=2, salt_bits=0)).build(
+        spark, df.withColumn("_chunk", F.col("c")), id_col="id",
+        url_col="id", build_id="dc", n_chunks=2, chunk_col="_chunk")
+    dc = str(tmp_root / "local_dup_chunk_compacted")
+    shutil.copytree(d, dc)
+    IndexBuilder(dc, BuildConfig(n_buckets=2, salt_bits=0)).compact_local(
+        spark)
+    return SearchIndex(spark, d), LocalSearchIndex(d), LocalSearchIndex(dc)
+
+
+def test_doc_in_two_chunks_scores_one_posting(dup_chunk_idx):
+    """A doc id present in two chunks keeps both postings in its streams,
+    and the OR kernel counts one of them: every reader and every
+    ``use_wand`` value gives the same answer, and the doc scores exactly
+    what the control doc with the same text scores."""
+    dist, loc, comp = dup_chunk_idx
+    q = ["zebra", "quokka", "alpha"]
+    want = _rows(dist.search(q, k=10, mode="OR"))
+    for ix in (dist, loc, comp):
+        for w in (False, True, "maxscore"):
+            assert _rows(ix.search(q, k=10, mode="OR", use_wand=w)) == want
+    score = dict(want)
+    assert score[7] == score[8]
+
+
 BAD_INPUT = {
     "k": lambda ix: ix.search(["the", "big"], k=-1, mode="OR"),
     "offset": lambda ix: ix.search(["the", "big"], k=5, mode="OR",
@@ -381,16 +440,14 @@ def test_compacted_search_after(compacted_chunked):
 
 def test_compacted_reads_slices_only(compacted_chunked, monkeypatch):
     """A compacted reader opens the file without rebuilding it, and its
-    queries neither scan parquet row groups nor re-block a stream."""
+    queries scan no parquet row groups."""
     import fatespark.local as local
     import fatespark.serving as serving
-    from fatespark.wand import TermBlocks
     dist, _, comp, _ = compacted_chunked
 
     def boom(*args, **kwargs):
         raise AssertionError("not on the serving path")
 
-    monkeypatch.setattr(TermBlocks, "_reblock", boom)
     monkeypatch.setattr(local._RGIndex, "read", boom)
     monkeypatch.setattr(serving, "build", boom)
     fresh = LocalSearchIndex(comp.index_dir)

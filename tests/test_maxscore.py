@@ -1,118 +1,6 @@
-"""MaxScore (Turtle & Flood 1995) must return the exhaustive kernel's
-exact top-k — scores bit-identical — while probing non-essential streams
-block-skippingly instead of decoding them.  Same contract (and the same
-adversarial scenario) as the Block-Max WAND suite; the two pruners differ
-only in which postings they avoid touching."""
-
-import numpy as np
-import pytest
-
-from fatespark.oracle import idf as idf_fn
-from fatespark.wand import (TermBlocks, score_exhaustive_or,
-                            score_maxscore_or)
-from tests.test_wand_prune import BLOCK, _blocks_of, _scenario
-
-
-def test_matches_exhaustive_bit_for_bit():
-    mk = _scenario()
-    s1, s2 = mk(), mk()
-    m_docs, m_scores = score_maxscore_or([s1["common"], s1["rare"]],
-                                         100.0, k=5)
-    e_docs, e_scores = score_exhaustive_or([s2["common"], s2["rare"]],
-                                           100.0, k=5)
-    assert list(m_docs) == list(e_docs)
-    assert list(m_scores) == list(e_scores)
-
-
-def test_common_stream_never_fully_decoded():
-    """The MaxScore claim: with a dominating rare stream, the common
-    stream is non-essential — it is only PROBED at candidate doc ids
-    (block-skipping lookups), never bulk-decoded."""
-    mk = _scenario()
-    s1 = mk()
-    base = s1["common"]
-    probed = []
-
-    class Spy(TermBlocks):  # __slots__ forbids instance monkeypatching
-        __slots__ = ()
-
-        def decode_blocks(self, sel):
-            probed.append(int(np.asarray(sel).size))
-            return super().decode_blocks(sel)
-
-        def decode_all(self):
-            pytest.fail("non-essential stream was bulk-decoded")
-
-    common = Spy.__new__(Spy)
-    for a in TermBlocks.__slots__:
-        setattr(common, a, getattr(base, a))
-    m_docs, _ = score_maxscore_or([common, s1["rare"]], 100.0, k=5)
-    assert m_docs.size == 5
-    total_blocks = len(common.ns)
-    assert probed and max(probed) < total_blocks * 0.2, (
-        probed, total_blocks)
-
-
-@pytest.mark.parametrize("qmul", [None, 10_000.0])
-def test_quantized_and_raw_parity(qmul):
-    mk = _scenario(n_rare=7)
-    s1, s2 = mk(), mk()
-    m = score_maxscore_or([s1["common"], s1["rare"]], 100.0, k=10,
-                          qmul=qmul)
-    e = score_exhaustive_or([s2["common"], s2["rare"]], 100.0, k=10,
-                            qmul=qmul)
-    assert list(m[0]) == list(e[0]) and list(m[1]) == list(e[1])
-
-
-def test_after_cursor_parity():
-    mk = _scenario(n_rare=12)
-    s1, s2 = mk(), mk()
-    e_docs, e_scores = score_exhaustive_or([s2["common"], s2["rare"]],
-                                           100.0, k=5)
-    cursor = (float(e_scores[-1]), int(e_docs[-1]))
-    s3, s4 = mk(), mk()
-    m2 = score_maxscore_or([s3["common"], s3["rare"]], 100.0, k=5,
-                           after=cursor)
-    e2 = score_exhaustive_or([s4["common"], s4["rare"]], 100.0, k=5,
-                             after=cursor)
-    assert list(m2[0]) == list(e2[0]) and list(m2[1]) == list(e2[1])
-    assert not set(m2[0].tolist()) & set(e_docs.tolist())
-
-
-def test_randomized_parity_many_shapes():
-    """Brute parity over random multi-stream shapes (overlaps, skew,
-    singleton streams, k larger than the corpus)."""
-    rng = np.random.RandomState(7)
-    for trial in range(25):
-        n_docs = int(rng.randint(50, 2000))
-        streams = []
-        for _ in range(int(rng.randint(1, 5))):
-            sz = int(rng.randint(1, max(2, n_docs // 2)))
-            docs = np.sort(rng.choice(n_docs, size=sz, replace=False)
-                           ).astype(np.int64)
-            tfs = rng.randint(1, 8, size=sz).astype(np.int64)
-            dls = rng.randint(20, 300, size=sz).astype(np.int64)
-            streams.append((idf_fn(n_docs, sz), docs, tfs, dls))
-        k = int(rng.choice([1, 3, 10, n_docs]))
-        mk = lambda: [_blocks_of(i, d, t, l, 100.0)
-                      for i, d, t, l in streams]
-        m = score_maxscore_or(mk(), 100.0, k=k)
-        e = score_exhaustive_or(mk(), 100.0, k=k)
-        assert list(m[0]) == list(e[0]), trial
-        assert list(m[1]) == list(e[1]), trial
-
-
-def test_empty_and_single_stream():
-    z = score_maxscore_or([], 100.0, k=5)
-    assert z[0].size == 0
-    docs = np.arange(40, dtype=np.int64)
-    t = _blocks_of(idf_fn(100, 40), docs, np.ones(40), np.full(40, 50),
-                   100.0)
-    t2 = _blocks_of(idf_fn(100, 40), docs, np.ones(40), np.full(40, 50),
-                    100.0)
-    m = score_maxscore_or([t], 100.0, k=5)
-    e = score_exhaustive_or([t2], 100.0, k=5)
-    assert list(m[0]) == list(e[0]) and list(m[1]) == list(e[1])
+"""``use_wand="maxscore"`` on a built index returns exactly what the
+plain OR search returns: every ``use_wand`` value runs the exhaustive
+kernel."""
 
 
 def test_reader_parity_on_built_index(spark, tmp_path_factory):

@@ -2,10 +2,8 @@
 Elasticsearch search_after contract) applied inside the per-bucket kernels.
 
 Exactness oracle: paging with cursors must reproduce exactly the slices of
-one big search — for AND, exhaustive OR, WAND, quantized scores (tie-heavy),
-and on both readers. WAND needs the blocked-doc tracking (a doc masked out
-as above-cursor must not re-enter via a partial finish re-score), so the
-corpus is large enough for multi-block preludes + wholesale finish.
+one big search — for AND, OR under every ``use_wand`` value, quantized
+scores (tie-heavy), and on both readers.
 """
 
 import numpy as np
@@ -125,27 +123,3 @@ def test_kernel_after_mask_semantics():
     assert m.tolist() == [False, False, True, True]
     d, s = wand.topk_select(docs, scores, 2, after=(5.0, 1))
     assert d.tolist() == [2, 3] and s.tolist() == [4.0, 4.0]
-
-
-def test_bmw_blocked_docs_never_reenter():
-    """Adversarial kernel-level check: many docs above the cursor, cursor
-    deep inside a tie plateau; BMW pages must equal exhaustive pages at
-    every cursor position (including ones forcing prelude+finish)."""
-    rng = np.random.default_rng(11)
-    n = 3000
-    docs = np.arange(n, dtype=np.int64)
-    tfs = rng.integers(1, 9, n).astype(np.int64)
-    dls = rng.integers(5, 60, n).astype(np.int64)
-    t1 = wand.TermBlocks.from_arrays(1.7, docs[::2], tfs[::2], dls[::2],
-                                     avgdl=30.0)
-    t2 = wand.TermBlocks.from_arrays(0.9, docs[::3], tfs[::3], dls[::3],
-                                     avgdl=30.0)
-    cursor = None
-    for _page in range(25):
-        de, se = wand.score_exhaustive_or([t1, t2], 30.0, 12, after=cursor)
-        dw, sw = wand.score_bmw_or([t1, t2], 30.0, 12, after=cursor)
-        assert de.tolist() == dw.tolist()
-        assert se.tolist() == sw.tolist()
-        if not de.size:
-            break
-        cursor = (float(se[-1]), int(de[-1]))
