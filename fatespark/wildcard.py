@@ -121,7 +121,7 @@ def search_wildcard(index, pattern: str, k: int = 10,
     """Wildcard query -> trigram-banded dictionary expansion -> OR-BM25."""
     terms = expand_wildcard(index, pattern, max_terms, trigrams)
     if not terms:
-        return index._empty()
+        return index._empty(with_url)
     return index.search(terms, k=k, mode="OR", with_url=with_url,
                         quantize=quantize)
 
@@ -302,6 +302,6 @@ def search_regexp(index, rx: str, k: int = 10,
     """Regexp query -> trigram-banded dictionary expansion -> OR-BM25."""
     terms = expand_regexp(index, rx, max_terms, trigrams)
     if not terms:
-        return index._empty()
+        return index._empty(with_url)
     return index.search(terms, k=k, mode="OR", with_url=with_url,
                         quantize=quantize)

@@ -143,8 +143,12 @@ def test_with_url_matches(pages_idx, contacts_idx):
         a, b = q(dist), q(loc)
         assert a.columns == list(b.columns) == ["doc_id", "score", "url"], i
         assert a.count() == len(b) == 0, i
-    a = dist.search_proximity_boost(["zzznope", "the"], with_url=True)
-    assert a.columns == ["doc_id", "score", "url"] and a.count() == 0
+    # Spark-only query kinds: a pattern that expands to no dictionary term
+    from fatespark.wildcard import search_regexp, search_wildcard
+    for a in [dist.search_proximity_boost(["zzznope", "the"], with_url=True),
+              search_wildcard(dist, "zzz*nope", with_url=True),
+              search_regexp(dist, "zzz.*nope", with_url=True)]:
+        assert a.columns == ["doc_id", "score", "url"] and a.count() == 0
 
 
 def test_index_stats_diagnostics(pages_idx, tmp_root):
